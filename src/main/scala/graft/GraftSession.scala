@@ -24,7 +24,21 @@ object GraftSession {
       // scale, where partitions far exceed this) keep sort-merge's graceful
       // spill; at partition sizes where a hash map fits, this removes both
       // sides' sorts from the frontier anti-join. Default is 0 (off).
+      // Memory assumption: the guard is on compressed shuffle bytes, and a
+      // deserialized build map can be several times larger; with one task
+      // per core each holding a map, the heap must fit cores × 128 MB ×
+      // that expansion, unspillable. A snapshot commit's write wave
+      // (SnapshotTable.commit) runs a round's write jobs at once: they
+      // share the same task slots, so the map bound stays per core, but
+      // the wave's broadcast relations and parquet writer buffers are all
+      // live together on top of it.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+      // Compiled-codegen cache (static conf; Spark's default is 100). A crawl
+      // round plans ~300 distinct generated classes, so at 100 entries the
+      // LRU evicts each before the next round reuses it, and every steady
+      // round recompiled ~276 classes with Janino (~20% of its CPU samples;
+      // 14 when they fit). Each entry holds one loaded generated class.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")

@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   * /root/reference/state/state.go).
   *
   * Sink semantics are at-least-once exactly like the reference (emit before
-  * checkpoint save, SURVEY.md §2.9): envelopes for round r are written
-  * before snapshot r commits, so a crash between the two re-emits round r on
+  * checkpoint save, SURVEY.md §2.9): envelopes for round r are written in
+  * the same concurrent write wave as snapshot r's segments, and the wave
+  * completes before snapshot r publishes ([[SnapshotTable.commit]]), so a
+  * crash anywhere in or after the wave re-runs and re-emits round r on
   * resume. Emits are keyed (round, host, ord) → idempotent read-back.
   *
   * State layout — every mutable table is an append-only EVENT LOG
@@ -56,11 +58,15 @@ import org.apache.spark.sql.functions._
   *    scheduler scans O(Σ min(H_host, alive_host)) rows per round — at the
   *    10^10-frontier / 10^7-fetch regime that is ~100× less than the alive
   *    queue — and the backing log is scanned ONLY at compaction, where the
-  *    fold rewrites those rows anyway. A `roundMillis`/budget change across
-  *    a resume can raise capacities past the provisioned H; a per-round
-  *    guard detects any shallow-head-with-finite-β host and falls back to
-  *    one exact full-queue scheduling round that also re-provisions the
-  *    head (config-change path only, never taken in steady state).
+  *    fold rewrites those rows anyway. A `roundMillis` increase across a
+  *    resume can raise capacities past the provisioned H; a guard detects
+  *    any shallow-head-with-finite-β host and falls back to one exact
+  *    full-queue scheduling round that also re-provisions the head
+  *    (config-change path only, never taken in steady state). `meta`
+  *    records the `roundMillis` the head was provisioned with (`head_ms`),
+  *    and the guard query runs only while the configured value exceeds it:
+  *    capacity is monotone in `roundMillis` and budgets are static
+  *    `hoststate`, so otherwise no host can be shallow.
   *  - `window_add`/`window_del`: the K-deep revision window, delta-committed
   *    — adds are this round's commits/replacements, dels are revisions and
   *    beyond-K evictions (both O(fetched)). The r3 design rewrote the full
@@ -90,8 +96,14 @@ import org.apache.spark.sql.functions._
   *  - revision handling is a bounded K-deep window diff, not an iterative
   *    walk (SURVEY.md §3.2); replacement pages are fetched in a distributed
   *    `mapPartitions` stage exactly like the main fetch — the driver never
-  *    fetches, and the per-round driver round-trips are two is-empty probes
-  *    (any revisions? any shallow head?).
+  *    fetches. The per-round driver round-trip is one is-empty probe (any
+  *    revisions?); the shallow-head probe runs only after a `roundMillis`
+  *    increase, and a round without revisions takes its zero delta counts
+  *    from the driver instead of counting empty frames.
+  *  - a round's durable writes (sink outputs, member-store files, snapshot
+  *    segments) are one concurrent wave before the single publish
+  *    ([[SnapshotTable.commit]]), and state reads use the schema recorded at
+  *    commit — no schema-inference job per table read.
   */
 object CrawlJob {
 
@@ -104,6 +116,13 @@ object CrawlJob {
       url_hash: Long, url: String, ver: Long)
 
   val EmitCols = Seq("round", "status", "host", "seq", "ord", "url_hash", "url", "priority")
+
+  /** The one `meta` row a snapshot carries: the round it committed, the
+    * incremental membership count, the bloom sizing, and the `roundMillis`
+    * the head cache was provisioned with. The driver reads it once per
+    * `run` and carries it from round to round.
+    */
+  final case class Meta(round: Long, member_count: Long, bloom_cap: Long, head_ms: Long)
 
   /** Head provisioning depth in rounds of capacity: the head is rebuilt at
     * seed/compaction to hold capacity × (interval + 1) rows per host, so
@@ -131,22 +150,18 @@ object CrawlJob {
     // carried forward by every commit, and read back on resume. At 10^8
     // hosts this is the table the gate/capacity joins shuffle against when
     // `broadcastHostState` is off.
-    val startRound: Long = state.latestSnapshot match {
-      case Some(snap) =>
-        state.read(spark, "meta").select(max("round")).as[Long].head() + 1
+    var meta: Meta = state.latestSnapshot match {
+      case Some(_) => state.read(spark, "meta").as[Meta].head()
       case None =>
         seedState(spark, cfg, state,
           spark.createDataset(SyntheticWeb.hostStates(cfg)).toDF(), broadcastHostState)
-        1L
     }
     val hostState = state.read(spark, "hoststate")
     val endRound = math.min(upToRound.getOrElse(cfg.rounds.toLong), cfg.rounds.toLong)
 
-    var round = startRound
-    while (round <= endRound) {
-      runRound(spark, cfg, round, state, sinkDir, hostState,
+    while (meta.round < endRound) {
+      meta = runRound(spark, cfg, meta, state, sinkDir, hostState,
         bloomThreshold, maxBloomBroadcastBytes, broadcastHostState)
-      round += 1
     }
     endRound
   }
@@ -157,7 +172,7 @@ object CrawlJob {
     * disallowed seed never consumes a sequence number.
     */
   private def seedState(spark: SparkSession, cfg: WebConfig, state: SnapshotTable,
-      hostState: DataFrame, broadcastHostState: Boolean): Unit = {
+      hostState: DataFrame, broadcastHostState: Boolean): Meta = {
     // F2 empty-response guard: the reference aborts at startup when its
     // start block comes back empty ("block not found",
     // /root/reference/cmd/blockspiderd/main.go:110-115) — a crawl with no
@@ -185,12 +200,13 @@ object CrawlJob {
   }
 
   /** Commit snapshot 0 from a pre-built (robots-gated) `queue_add` set:
-    * counters, membership, blooms, and the provisioned head cache. Public so
-    * scale drivers ([[graft.tools.DriveQueueScale]]) can seed an arbitrary
-    * pre-accumulated frontier through the same path a real crawl uses.
+    * counters, membership, blooms, and the head cache provisioned for
+    * `roundMillis`. Public so scale drivers ([[graft.tools.DriveQueueScale]])
+    * can seed an arbitrary pre-accumulated frontier through the same path a
+    * real crawl uses. Returns the committed [[Meta]].
     */
   def seedSnapshot(spark: SparkSession, state: SnapshotTable, queueAdd0: DataFrame,
-      hostState: DataFrame, roundMillis: Long): Unit = {
+      hostState: DataFrame, roundMillis: Long): Meta = {
     import spark.implicits._
     val queueAdd = queueAdd0.localCheckpoint(true)
     val hostctr = queueAdd.groupBy("host")
@@ -209,22 +225,25 @@ object CrawlJob {
     val blooms =
       if (memberCount == 0) SeenSet.emptyBlooms(spark, cap)
       else SeenSet.buildBloomsDf(memberAdd.select("url_hash"), cap)
-    // the exact fingerprint store's first base generation (crash-safe:
-    // written before the commit that references round 0; a crash in between
-    // re-runs the seed, which rewrites these files atomically)
-    MemberStore.writeBase(memberAdd, memberStoreRoot(state), 0L, SeenSet.DefaultShards)
+    val meta = Meta(0L, memberCount, cap, roundMillis)
     state.commit(
       Map(
         "hoststate" -> hostState,
         "headmeta" -> headmeta,
-        "blooms" -> blooms,
-        "meta" -> Seq((0L, memberCount, cap)).toDF("round", "member_count", "bloom_cap")),
+        "blooms" -> blooms.sortWithinPartitions("shard"),
+        "meta" -> Seq(meta).toDF()),
       appendOnly = Map(
         "member_add" -> memberAdd, "member_del" -> emptyDel,
         "queue_add" -> queueShaped, "queue_del" -> emptyDel,
         "head_add" -> headAdd, "head_del" -> emptyDel,
         "window_add" -> emptyWindow, "window_del" -> emptyWDel,
-        "hostctr_add" -> hostctr))
+        "hostctr_add" -> hostctr),
+      // the exact fingerprint store's first base generation, in the same
+      // wave (a crash before the publish re-runs the seed, which rewrites
+      // these files atomically)
+      alongside = Seq(() =>
+        MemberStore.writeBase(memberAdd, memberStoreRoot(state), 0L, SeenSet.DefaultShards)))
+    meta
   }
 
   /** Initial bloom sizing (items per shard); compaction resizes with 2×
@@ -423,11 +442,30 @@ object CrawlJob {
       col("priority") > col("bp") ||
       (col("priority") === col("bp") && col("seq") < col("bs"))
 
-  private def runRound(spark: SparkSession, cfg: WebConfig, round: Long,
+  /** Is any host's head shallower than its capacity at `roundMillis` while
+    * its boundary is finite (a headmeta row)? One driver round-trip.
+    */
+  private def headIsShallow(headmeta: DataFrame, headAlive: DataFrame,
+      hostState: DataFrame, roundMillis: Long): Boolean = {
+    val capsNow = hostState.select(col("host"),
+      Scheduler.capacity(col("budget"), col("min_delay_ms"), roundMillis)
+        .cast("long").as("cap"))
+    !headmeta
+      .join(capsNow, Seq("host"), "inner")
+      .join(headAlive.groupBy("host").agg(count(lit(1)).as("hn")), Seq("host"), "left")
+      .filter(coalesce(col("hn"), lit(0L)) < col("cap"))
+      .isEmpty
+  }
+
+  /** One round after the snapshot described by `meta0`; returns the meta it
+    * commits.
+    */
+  private def runRound(spark: SparkSession, cfg: WebConfig, meta0: Meta,
       state: SnapshotTable, sinkDir: String, hostState: DataFrame,
       bloomThreshold: Long, maxBloomBroadcastBytes: Long,
-      broadcastHostState: Boolean): Unit = {
+      broadcastHostState: Boolean): Meta = {
     import spark.implicits._
+    val round = meta0.round + 1
 
     // Round inputs: the bounded head cache (NOT the full queue), the K-deep
     // window, per-host counters, and incremental membership bookkeeping
@@ -435,8 +473,8 @@ object CrawlJob {
     // are never recounted or rescanned.
     val headAlive = readHead(spark, state).persist()
     val headmeta = state.read(spark, "headmeta")
-    val (memberCount0, bloomCap) = state.read(spark, "meta")
-      .select(col("member_count"), col("bloom_cap")).as[(Long, Long)].head()
+    val memberCount0 = meta0.member_count
+    val bloomCap = meta0.bloom_cap
     val windowStart = readWindow(spark, state).localCheckpoint(true)
     var hostctr = readHostctr(spark, state)
     val emitParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -518,19 +556,15 @@ object CrawlJob {
     // ---- 2. politeness-aware per-host top-k over the HEAD cache ----------
     // (robots were gated at enqueue time — the queue contains only allowed
     // URLs, so scheduling needs no robots re-check and no queue purge.)
-    // Guard (driver signal 2 of 2): a host whose head is shallower than its
-    // capacity while its boundary is finite means capacities grew past the
-    // provisioned depth (a roundMillis/budget change across a resume —
-    // impossible in steady state, where depth ≥ cap between folds by
-    // construction). Fall back to one exact full-queue round and re-provision.
-    val capsNow = hostState.select(col("host"),
-      Scheduler.capacity(col("budget"), col("min_delay_ms"), cfg.roundMillis)
-        .cast("long").as("cap"))
-    val shallow = headmeta
-      .join(capsNow, Seq("host"), "inner")
-      .join(headAlive.groupBy("host").agg(count(lit(1)).as("hn")), Seq("host"), "left")
-      .filter(coalesce(col("hn"), lit(0L)) < col("cap"))
-    val emergencyRefill = !shallow.isEmpty
+    // Guard (driver signal 2 of 2): capacities grew past the provisioned
+    // depth (a roundMillis increase across a resume — impossible in steady
+    // state, where depth ≥ cap between folds by construction). Fall back to
+    // one exact full-queue round and re-provision. Capacity is monotone in
+    // roundMillis and budgets are static hoststate, so no host can be
+    // shallow unless roundMillis exceeds the value the head was provisioned
+    // with; otherwise the query is not run.
+    val emergencyRefill = cfg.roundMillis > meta0.head_ms &&
+      headIsShallow(headmeta, headAlive, hostState, cfg.roundMillis)
     val schedSource =
       if (emergencyRefill) readQueue(spark, state).persist()
       else headAlive
@@ -624,16 +658,19 @@ object CrawlJob {
     // path and the compaction fold — no steady-state round scans it.
     val emptyHashDelta = spark.emptyDataset[(Long, Long)].toDF("url_hash", "r")
     val emptyDelDelta = spark.emptyDataset[(Long, Long)].toDF("url_hash", "dr")
-    val replAdds = (addParts :+ emptyHashDelta).reduce(_ unionByName _)
-      .localCheckpoint(true) // O(revised hosts · depth)
-    val delsDelta = (delParts :+ emptyDelDelta).reduce(_ unionByName _)
-      .localCheckpoint(true)
+    // O(revised hosts · depth) each; a round without revisions has none, and
+    // the driver knows their counts are 0 without running a job
+    def delta(parts: Seq[DataFrame], empty: DataFrame): (DataFrame, Long) =
+      if (parts.isEmpty) (empty, 0L)
+      else {
+        val df = parts.reduce(_ unionByName _).localCheckpoint(true)
+        (df, df.count())
+      }
+    val (replAdds, replCount) = delta(addParts.toSeq, emptyHashDelta)
+    val (delsDelta, delsCount) = delta(delParts.toSeq, emptyDelDelta)
     lazy val membersView = readMembers(spark, state)
       .join(delsDelta.select("url_hash"), Seq("url_hash"), "left_anti")
       .unionByName(replAdds.select("url_hash"))
-
-    val replCount = replAdds.count()
-    val delsCount = delsDelta.count()
 
     // probe blooms = persisted ∪ this round's replacement adds (tiny);
     // committed blooms additionally OR in the new entries below.
@@ -699,6 +736,9 @@ object CrawlJob {
       (if (isCompaction) SeenSet.buildBloomsDf(membersEnd, newBloomCap)
        else if (newCount == 0) probeBlooms
        else SeenSet.mergeBlooms(probeBlooms, SeenSet.bloomDelta(newEntries, bloomCap)))
+        // the merge's row order follows shuffle-read order; sorting in the
+        // checkpoint job makes the committed segment repeat byte for byte
+        .sortWithinPartitions("shard")
         .localCheckpoint(true) // ≤ shards blob rows
     }
 
@@ -721,29 +761,33 @@ object CrawlJob {
       .join(activeCtrHosts, Seq("host"), "left_semi")
       .withColumn("hr", lit(round))
 
-    // ---- 9. emit (before checkpoint → at-least-once), then commit --------
+    // ---- 9. emit + checkpoint: one write wave, then the publish ----------
+    // The sink writes ride the commit's concurrent wave, which completes
+    // before LATEST moves — emit-before-checkpoint, so at-least-once holds.
     val emits = emitParts.reduce(_ unionByName _)
-    emits
-      .repartitionByRange(col("host"))
-      .sortWithinPartitions(Scheduler.globalOrder: _*)
-      .write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/emits-$round%04d")
-    pages.write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/pages-$round%04d")
+    val sinkWrites: Seq[() => Unit] = Seq(
+      () => emits
+        .repartitionByRange(col("host"))
+        .sortWithinPartitions(Scheduler.globalOrder: _*)
+        .write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/emits-$round%04d"),
+      () => pages.write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/pages-$round%04d"),
+      // per-partition lineage + fetch metrics (north_rule)
+      () => fetchedDf
+        .groupBy(spark_partition_id().as("partition_id"))
+        .agg(count(lit(1)).as("n_fetched"),
+          sum(when(!col("ok"), 1L).otherwise(0L)).as("n_failed"),
+          min("seq").as("min_seq"), max("seq").as("max_seq"))
+        .withColumn("round", lit(round))
+        .write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/metrics-$round%04d"))
 
-    // per-partition lineage + fetch metrics (north_rule)
-    fetchedDf
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("n_fetched"),
-        sum(when(!col("ok"), 1L).otherwise(0L)).as("n_failed"),
-        min("seq").as("min_seq"), max("seq").as("max_seq"))
-      .withColumn("round", lit(round))
-      .write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/metrics-$round%04d")
-
-    val meta = Seq((round, memberCount, newBloomCap))
-      .toDF("round", "member_count", "bloom_cap")
+    val refolded = isCompaction || emergencyRefill
+    val metaEnd = Meta(round, memberCount, newBloomCap,
+      if (refolded) cfg.roundMillis else meta0.head_ms)
+    val meta = Seq(metaEnd).toDF()
     val winDels = (winDelParts :+ spark.emptyDataset[(String, Long)].toDF("host", "ord"))
       .reduce(_ unionByName _)
     val addsDelta = replAdds.unionByName(newEntries.select(col("url_hash"), lit(round).as("r")))
-    if (isCompaction || emergencyRefill) {
+    if (refolded) {
       // compaction (or emergency re-provision): fold every event log into a
       // single alive segment, clear tombstones, and rebuild the head cache —
       // resume and membership semantics unchanged. The queue fold is the
@@ -761,14 +805,10 @@ object CrawlJob {
       val (queueShaped, headEnd, headmetaEnd) = timed("fold:build-head") {
         shapeAndBuildHead(queueEnd, hostState, cfg.roundMillis)
       }
-      // fold the fingerprint store too: one fresh base generation from the
-      // alive membership (the same rows the member_add rewrite persists),
-      // clearing every delta file — written before the commit (crash ⇒
+      // the fold's write wave also carries the fingerprint store's fresh
+      // base generation from the alive membership (the same rows the
+      // member_add rewrite persists) — written before the publish (crash ⇒
       // deterministic re-run rewrites it)
-      timed("fold:store-base") {
-        MemberStore.writeBase(membersEnd, memberStoreRoot(state), round,
-          SeenSet.DefaultShards)
-      }
       timed("fold:commit")(state.commit(Map(
         "member_add" -> membersEnd.withColumn("r", lit(round)),
         "member_del" -> emptyDelDelta,
@@ -782,12 +822,12 @@ object CrawlJob {
         "window_del" -> spark.emptyDataset[(String, Long)].toDF("host", "ord"),
         "hostctr_add" -> hostctrEnd.withColumn("hr", lit(round)),
         "blooms" -> blooms,
-        "meta" -> meta)))
+        "meta" -> meta),
+        alongside = sinkWrites :+ (() => MemberStore.writeBase(membersEnd,
+          memberStoreRoot(state), round, SeenSet.DefaultShards))))
     } else {
       // O(delta) fingerprint-store maintenance: this round's add/del file
-      // set, written before the commit that references it
-      MemberStore.writeDelta(addsDelta, delsDelta, memberStoreRoot(state),
-        round, SeenSet.DefaultShards)
+      // set, in the wave before the publish that references it
       state.commit(
         Map("blooms" -> blooms, "meta" -> meta),
         appendOnly = Map(
@@ -795,7 +835,9 @@ object CrawlJob {
           "queue_add" -> newEntries, "queue_del" -> queueDelDelta,
           "head_add" -> headAddDelta, "head_del" -> queueDelDelta,
           "window_add" -> winAdds, "window_del" -> winDels,
-          "hostctr_add" -> hostctrDelta))
+          "hostctr_add" -> hostctrDelta),
+        alongside = sinkWrites :+ (() => MemberStore.writeDelta(addsDelta, delsDelta,
+          memberStoreRoot(state), round, SeenSet.DefaultShards)))
     }
     state.expireOldSnapshots(keep = 2)
     expireOldBloomBlobs(state.dir, round, keep = 2)
@@ -804,6 +846,7 @@ object CrawlJob {
     fetchedDf.unpersist(); committed.unpersist(); withOrd.unpersist()
     headAlive.unpersist()
     if (emergencyRefill) schedSource.unpersist()
+    metaEnd
   }
 
   /** Opt-in coarse phase timing (set GRAFT_TIMING=1): prints wall time per

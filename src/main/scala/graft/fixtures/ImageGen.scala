@@ -186,10 +186,18 @@ object ImageGen {
         params.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
         params.setCompressionQuality(JpegQuality)
         val ios = ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
-        try writer.write(null, new IIOImage(img, null, null), params)
-        finally writer.setOutput(null)
-        ios.close()
+        try {
+          writer.setOutput(ios)
+          writer.write(null, new IIOImage(img, null, null), params)
+          writer.setOutput(null)
+        } catch {
+          case e: Throwable =>
+            // a writer that failed mid-image is in an undefined state: the
+            // thread's next encode gets a fresh one
+            jpegWriter.remove()
+            writer.dispose()
+            throw e
+        } finally ios.close()
     }
     bos.toByteArray
   }

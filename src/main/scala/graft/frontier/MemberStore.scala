@@ -1,5 +1,6 @@
 package graft.frontier
 
+import graft.tables.SnapshotTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -108,12 +109,15 @@ object MemberStore {
     java.nio.file.Files.writeString(dir.resolve("META"), s"shards=$shards\n")
   }
 
-  /** Write one round's DELTA file set (adds + dels, both O(delta)). */
+  /** Write one round's DELTA file set (adds + dels, both O(delta), written
+    * concurrently).
+    */
   def writeDelta(adds: DataFrame, dels: DataFrame, root: String, round: Long,
       shards: Int): Unit = {
     val dir = deltaDir(root, round)
-    writeKind(adds.select("url_hash"), dir, "add", shards)
-    writeKind(dels.select("url_hash"), dir, "del", shards)
+    SnapshotTable.concurrently(Seq(
+      () => writeKind(adds.select("url_hash"), dir, "add", shards),
+      () => writeKind(dels.select("url_hash"), dir, "del", shards)))
     // marker: the delta set for this round is completely written (both kinds)
     java.nio.file.Files.writeString(dir.resolve("DONE"), "")
   }

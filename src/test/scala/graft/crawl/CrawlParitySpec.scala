@@ -2,7 +2,10 @@ package graft.crawl
 
 import graft.SparkTestBase
 import graft.fixtures.{SyntheticWeb, WebConfig}
+import graft.frontier.MemberStore
 import graft.functions.GraftHash
+import graft.tables.SnapshotTable
+import org.apache.spark.graft.SparkEvents
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -18,6 +21,14 @@ class CrawlParitySpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String = Files.createTempDirectory("graft-crawl").toString
+
+  /** Spark jobs a steady `run(upToRound = r)` of a 40-seed crawl may start
+    * (73 with the write wave and recorded schemas; 85-87 before them).
+    */
+  private val JobsPerRoundCeiling = 75
+
+  /** The method that runs the shallow-head guard query. */
+  private val GuardFrame = "headIsShallow("
 
   private def emitKey(r: (Long, String, String, Long, Long, Long, String, Int)) = r
 
@@ -81,6 +92,50 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(engineEmits(sinkDir) === refEmits(ref))
     val engineSeen = CrawlJob.readSeen(spark, stateDir).as[Long].collect().toSet
     assert(engineSeen === ref.seen)
+  }
+
+  test("a round whose write wave fails publishes nothing; resume is exactly-once for state, at-least-once for sink") {
+    val cfg = WebConfig(numSeeds = 40, rounds = 5)
+    val ref = RefWalker.run(cfg)
+    val stateDir = tmp(); val sinkDir = tmp()
+    CrawlJob.run(spark, cfg, stateDir, sinkDir, upToRound = Some(2))
+    // a regular file where round 3's member-store delta directory goes:
+    // that one write of round 3's wave fails, its siblings complete
+    val blocker = MemberStore.deltaDir(CrawlJob.memberStoreRoot(new SnapshotTable(stateDir)), 3L)
+    Files.writeString(blocker, "")
+    intercept[Exception](CrawlJob.run(spark, cfg, stateDir, sinkDir))
+    assert(new SnapshotTable(stateDir).latestSnapshot === Some(2L))
+
+    Files.delete(blocker)
+    CrawlJob.run(spark, cfg, stateDir, sinkDir)
+    val got = engineEmits(sinkDir)
+    val want = refEmits(ref)
+    assert(want.toSet.subsetOf(got.toSet), "an emit of the reference is missing")
+    // idempotent read-back: one envelope per (round, host, ord) key
+    val byKey = got.groupBy(e => (e._1, e._3, e._5))
+    assert(byKey.values.forall(_.distinct.size == 1), "conflicting envelopes for one key")
+    assert(byKey.values.map(_.head).toSeq.sortBy(e => (e._1, e._3, e._5, e._2)) === want)
+    assert(CrawlJob.readSeen(spark, stateDir).as[Long].collect().toSet === ref.seen)
+    assert(CrawlJob.readQueue(spark, stateDir).count() === ref.queueSize.toLong)
+  }
+
+  test("steady rounds stay under a jobs ceiling, never run the shallow-head guard, and read recorded schemas") {
+    val cfg = WebConfig(numSeeds = 40, rounds = 5)
+    val stateDir = tmp(); val sinkDir = tmp()
+    CrawlJob.run(spark, cfg, stateDir, sinkDir, upToRound = Some(1), bloomThreshold = 0L)
+    val rounds = (2L to 5L).map { r =>
+      SparkEvents.during(spark.sparkContext)(CrawlJob.run(spark, cfg, stateDir, sinkDir,
+        upToRound = Some(r), bloomThreshold = 0L))._2
+    }
+    val jobs = rounds.map(_.jobs)
+    assert(jobs.max <= JobsPerRoundCeiling, s"jobs per round: $jobs")
+    assert(rounds.forall(_.sqlCallSites.forall(!_.contains(GuardFrame))),
+      "the shallow-head guard ran although roundMillis never grew")
+    val st = new SnapshotTable(stateDir)
+    st.tableNames().foreach { n =>
+      val inferred = spark.read.parquet(st.segmentsOf(st.latestSnapshot.get, n): _*)
+      assert(st.read(spark, n).schema === inferred.schema, s"recorded schema of $n")
+    }
   }
 
   test("no failures → same spec, more commits (prefix-commit only bites on failure)") {
@@ -272,13 +327,17 @@ class CrawlParitySpec extends AnyFunSuite {
     val seedMetaA = new graft.tables.SnapshotTable(stA) // β from small caps
     val betaSeed = seedMetaA.read(spark, "headmeta").count()
     assert(betaSeed > 0, "fixture too shallow: no truncated head at seed")
-    CrawlJob.run(spark, cfgBig, stA, skA)
+    val (_, runA) = SparkEvents.during(spark.sparkContext)(CrawlJob.run(spark, cfgBig, stA, skA))
+    assert(runA.sqlCallSites.count(_.contains(GuardFrame)) === 1,
+      "the guard must run once, until the emergency round re-provisions the head")
+    assert(seedMetaA.read(spark, "meta").as[CrawlJob.Meta].head().head_ms === cfgBig.roundMillis)
 
     // path B: head provisioned for the BIG capacities from the start
     val stB = tmp(); val skB = tmp()
     CrawlJob.seedSnapshot(spark, new graft.tables.SnapshotTable(stB),
       queueAdd, hostStateDf, cfgBig.roundMillis)
-    CrawlJob.run(spark, cfgBig, stB, skB)
+    val (_, runB) = SparkEvents.during(spark.sparkContext)(CrawlJob.run(spark, cfgBig, stB, skB))
+    assert(!runB.sqlCallSites.exists(_.contains(GuardFrame)))
 
     assert(engineEmits(skA) === engineEmits(skB),
       "emergency re-provision path diverged from the correctly-provisioned run")
