@@ -34,12 +34,6 @@ object Bench {
     "q_hex_roundtrip", "q_politeness_topk", "q_reorg_diff")
 
   def main(args: Array[String]): Unit = {
-    // child mode: `Bench frontier <cores> <n>` — one isolated measurement
-    if (args.length >= 3 && args(0) == "frontier") {
-      val t = frontierSecs(args(1).toInt, args(2).toLong)
-      println(f"FRONTIER_SECS=$t%.4f")
-      sys.exit(0)
-    }
     // child mode: `Bench frontierlevel <cores> <n> <reps>` — one JVM for a
     // LEVEL VISIT: setup once, one discarded full warm run, then `reps`
     // timed runs, ALL rep times reported (the parent picks the statistic)
@@ -204,17 +198,6 @@ object Bench {
     } finally spark.stop()
   }
 
-  /** Back-compat single-number variant (min of [[frontierLevelRuns]]). */
-  def frontierLevelSecs(cores: Int, n: Long, reps: Int): Double =
-    frontierLevelRuns(cores, n, reps).min
-
-  /** Run `frontierSecs(cores, n)` in a child JVM and parse the result.
-    * Falls back to in-process if the spawn fails.
-    */
-  def frontierSecsIsolated(cores: Int, n: Long): Double =
-    spawnChild(cores, Seq("frontier", cores.toString, n.toString))
-      .getOrElse(frontierSecs(cores, n))
-
   /** Spawn a `frontierlevel` child and parse its full rep-time list. */
   private def spawnChildRuns(cores: Int, benchArgs: Seq[String]): Option[Seq[Double]] =
     spawnChildOutput(cores, benchArgs).flatMap(
@@ -222,14 +205,7 @@ object Bench {
         l.split("FRONTIER_RUNS=")(1).trim.split(",").map(_.toDouble).toSeq
       })
 
-  private def spawnChild(cores: Int, benchArgs: Seq[String]): Option[Double] =
-    spawnChildOutput(cores, benchArgs).flatMap(
-      _.collectFirst { case l if l.contains("FRONTIER_SECS=") =>
-        l.split("FRONTIER_SECS=")(1).trim.toDouble
-      })
-
-  private def spawnChildOutput(cores: Int, benchArgs: Seq[String],
-      extraEnv: Map[String, String] = Map.empty): Option[List[String]] = {
+  private def spawnChildOutput(cores: Int, benchArgs: Seq[String]): Option[List[String]] = {
     try {
       val java = s"${System.getProperty("java.home")}/bin/java"
       val addOpens = Seq(
@@ -260,7 +236,6 @@ object Bench {
         "-cp", System.getProperty("java.class.path"),
         "graft.Bench") ++ benchArgs).toArray
       val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
       val p = pb.start()
       val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
       p.waitFor()
@@ -274,23 +249,6 @@ object Bench {
     */
   private final case class FrontierCtx(n: Long, cap: Long, seen: DataFrame,
       blooms: DataFrame, provider: SeenSet.BloomShardProvider)
-
-  /** One frontier round over `n` synthetic URLs (a third already seen),
-    * timed after a warm-up pass at n/10. Fresh SparkSession per parallelism
-    * level so the executor-thread count really differs.
-    */
-  def frontierSecs(cores: Int, n: Long): Double = {
-    val spark = GraftSession.builder(cores)
-      .appName(s"graft-frontier-$cores").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      run(spark, setup(spark, n / 10), budgetBase = 100) // warm-up: jit + codegen
-      val ctx = setup(spark, n)
-      val t0 = System.nanoTime()
-      run(spark, ctx, budgetBase = 800)
-      (System.nanoTime() - t0) / 1e9
-    } finally spark.stop()
-  }
 
   private def genFrontier(spark: SparkSession, n: Long): DataFrame = {
     val parts = spark.sparkContext.defaultParallelism
@@ -325,12 +283,6 @@ object Bench {
     * per-round O(delta) seen-set maintenance).
     */
   private def run(spark: SparkSession, ctx: FrontierCtx, budgetBase: Int): Unit = {
-    val timing = sys.env.contains("SPARK_GRAFT_PHASE_TIMING")
-    def phase[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (timing) println(f"PHASE $name ${(System.nanoTime() - t0) / 1e9}%.2f")
-      r
-    }
     val hosts = 256
     val frontier = genFrontier(spark, ctx.n)
     val hostState = spark.range(hosts)
@@ -347,14 +299,11 @@ object Bench {
     // `path`, and the block-manager write is the round's worst-scaling
     // phase (memory-bandwidth-bound), so every cached byte is paid at 1/4
     // the parallel efficiency of the fetch stage.
-    val gated = phase("dedup_gate_cache") {
-      Scheduler.robotsGate(
-        SeenSet.filterNew(spark, frontier, ctx.seen, ctx.provider), hostState)
-        .select("host", "url", "url_hash", "seq", "priority")
-        .localCheckpoint(true)
-    }
+    val gated = Scheduler
+      .robotsGate(SeenSet.filterNew(spark, frontier, ctx.seen, ctx.provider), hostState)
+      .select("host", "url", "url_hash", "seq", "priority")
+      .localCheckpoint(true)
     val scheduled = Scheduler.schedule(gated, hostState, roundMillis = 10000L).persist()
-    if (timing) phase("schedule")(scheduled.count())
 
     // fetch + payload validation: decode the page's image and check PSNR
     // against the source raster (ImageValidate semantics, inlined on the
@@ -375,25 +324,12 @@ object Bench {
         if (fmt == "png") (if (p.isPosInfinity) 1L else 0L)
         else (if (p >= graft.validate.ImageValidate.PsnrGateDb) 1L else 0L)
       })
-    phase("fetch_validate") {
-      require(validated.reduce(_ + _) > 0, "no pages validated")
-    }
+    require(validated.reduce(_ + _) > 0, "no pages validated")
 
     // O(delta) seen-set maintenance for the committed batch
-    phase("bloom_merge") {
-      val merged = SeenSet.mergeBlooms(ctx.blooms,
-        SeenSet.bloomDelta(scheduled.select("url_hash"), ctx.cap))
-      require(merged.count() == SeenSet.DefaultShards, "bloom merge lost shards")
-    }
+    val merged = SeenSet.mergeBlooms(ctx.blooms,
+      SeenSet.bloomDelta(scheduled.select("url_hash"), ctx.cap))
+    require(merged.count() == SeenSet.DefaultShards, "bloom merge lost shards")
     scheduled.unpersist()
   }
-
-  /** Diagnostic: one pinned child per level with per-phase timing printed
-    * (`SPARK_GRAFT_PHASE_TIMING`). Not part of the gate measurement.
-    */
-  def frontierPhaseDiag(cores: Int, n: Long, reps: Int): Unit =
-    spawnChildOutput(cores, Seq("frontierlevel", cores.toString, n.toString, reps.toString),
-      Map("SPARK_GRAFT_PHASE_TIMING" -> "1"))
-      .foreach(_.filter(l => l.contains("PHASE") || l.contains("FRONTIER_RUNS"))
-        .foreach(l => println(s"cores=$cores $l")))
 }

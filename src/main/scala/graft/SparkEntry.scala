@@ -450,9 +450,10 @@ object SparkEntry {
       // shortlist 50 → exact re-rank, the IVFADC+R scheme) recalls ≥
       // AnnPqRecallFloor of them. Near-uniform random vectors are PQ's
       // worst case (code distances quantize away the neighbor margins —
-      // raw ADC@10 measures 0.4-0.5 here, DrivePqRecall); the rerank path
-      // measures 1.0 / 0.9 at sf0.001 / sf0.01 (deterministic: seeded init
-      // on fixed data), so the 0.5 floor asserts the scheme with margin.
+      // raw ADC@10 measures 0.4-0.5 here, PLANS.md "ProductQuant"); the
+      // rerank path measures 1.0 / 0.9 at sf0.001 / sf0.01 (deterministic:
+      // seeded init on fixed data), so the 0.5 floor asserts the scheme
+      // with margin.
       val q = (0 until 64).map(i => math.sin(i + 1)).toArray
       val emb = t(s, d, "embeddings")
       val cb = ProductQuant.train(s, emb, "vec_id", "embedding",
@@ -482,7 +483,7 @@ object SparkEntry {
       // EXACT squared-L2 top-k; the 1-row guard exists only while the
       // nprobe=8-of-16 IVFADC search (m=16, ksub=32 residual codes,
       // shortlist 50) recalls ≥ AnnPqRecallFloor of them. Measured
-      // (DrivePqRecall, deterministic: seeded init on fixed data):
+      // (PLANS.md "IvfPq", deterministic: seeded init on fixed data):
       // 0.70 / 0.90 at sf0.001 / sf0.01 — probe pruning costs recall on
       // near-uniform vectors exactly as q_ann_ivf documents, and the
       // floor asserts the composed scheme with margin.
@@ -880,8 +881,9 @@ object SparkEntry {
         (f"spm$i%010d", ph(i + 100), graft.fixtures.ImageGen.captionOf(i))
       }.toDF("image_id", "phash", "caption")
       // spamHamming = 16: the planted far-pairs measure Hamming 20-30 and
-      // the fixture's closest DISTINCT rasters sit at 8 (DriveXmodal), so
-      // 16 splits the two populations with margin on both sides
+      // the fixture's closest DISTINCT rasters sit at 8 (COVERAGE.md,
+      // cross-modal row), so 16 splits the two populations with margin on
+      // both sides
       graft.multimodal.Multimodal.crossModalConflicts(
         base.unionByName(drift).unionByName(spam), spamHamming = 16)
     }),

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   *  - `queue_add`/`queue_del`: the frontier ground truth. After this round's
   *    refactor NOTHING reads it per round — scheduling reads the bounded
   *    head cache below; the full log is only folded at compaction
-  *    (amortized 1/interval) and read by tools/tests.
+  *    (amortized 1/interval) and read by tests and benchmarks.
   *  - `head_add`/`head_del` + `headmeta`: the per-host HEAD CACHE — the
   *    frontier analog of the reference's sequential cursor
   *    (/root/reference/crawler/blocks.go:50,60). `headmeta` pins a per-host
@@ -201,8 +201,8 @@ object CrawlJob {
 
   /** Commit snapshot 0 from a pre-built (robots-gated) `queue_add` set:
     * counters, membership, blooms, and the head cache provisioned for
-    * `roundMillis`. Public so scale drivers ([[graft.tools.DriveQueueScale]])
-    * can seed an arbitrary pre-accumulated frontier through the same path a
+    * `roundMillis`. Public so a benchmark (crawlbench's `deep_queue`) can
+    * seed an arbitrary pre-accumulated frontier through the same path a
     * real crawl uses. Returns the committed [[Meta]].
     */
   def seedSnapshot(spark: SparkSession, state: SnapshotTable, queueAdd0: DataFrame,
@@ -219,7 +219,6 @@ object CrawlJob {
     val emptyWindow = spark.emptyDataset[(String, Long, Long, Long, String, Long)]
       .toDF("host", "ord", "seq", "url_hash", "url", "ver")
     val emptyWDel = spark.emptyDataset[(String, Long)].toDF("host", "ord")
-    val emptyHash = spark.emptyDataset[(Long, Long)].toDF("url_hash", "r")
     val emptyDel = spark.emptyDataset[(Long, Long)].toDF("url_hash", "dr")
     val cap = InitialBloomCapPerShard
     val blooms =
@@ -276,10 +275,11 @@ object CrawlJob {
       .select("url_hash")
   }
 
-  /** The fetched-and-alive ("seen") view, for tests/tools: members minus the
-    * alive queue. Exact because a URL is never simultaneously queued and
-    * fetched-alive (fetch removes it from the queue; a failed fetch leaves
-    * it queued and unfetched; retraction targets fetched URLs only).
+  /** The fetched-and-alive ("seen") view, for tests and benchmarks: members
+    * minus the alive queue. Exact because a URL is never simultaneously
+    * queued and fetched-alive (fetch removes it from the queue; a failed
+    * fetch leaves it queued and unfetched; retraction targets fetched URLs
+    * only).
     */
   def readSeen(spark: SparkSession, state: SnapshotTable): DataFrame =
     readMembers(spark, state)
@@ -297,7 +297,7 @@ object CrawlJob {
     * fetches-per-round × [[SeenCompactionInterval]]; the planner picks the
     * join side (broadcast at any sane volume). NOTHING in a steady-state
     * round reads this view — scheduling reads [[readHead]]; this is the
-    * compaction-fold / tools / emergency path.
+    * compaction-fold / benchmark / emergency path.
     */
   def readQueue(spark: SparkSession, state: SnapshotTable): DataFrame =
     readLog(state.read(spark, "queue_add"), state.read(spark, "queue_del"))
@@ -338,6 +338,13 @@ object CrawlJob {
     */
   val SeenCompactionInterval = 8L
 
+  // public: codegen'd (de)serializers live outside this object and cannot
+  // touch private classes
+  final case class HeadIn(host: String, url: String, url_hash: Long,
+      seq: Long, priority: Int, qr: Long, head_depth: Long)
+  final case class HeadOut(tag: Int, host: String, url: String,
+      url_hash: Long, seq: Long, priority: Int, qr: Long, bp: Int, bs: Long)
+
   /** Provision the head cache from an alive queue: per host, the top
     * H = capacity × [[HeadDepthRounds]] rows by (priority desc, seq asc),
     * plus the boundary β (the LAST kept row's key) for hosts that were
@@ -349,21 +356,8 @@ object CrawlJob {
     * the backing log until the next fold. The rank runs over the alive
     * queue — an O(total) pass, which is why it happens only at
     * seed/compaction where the fold rewrites those rows anyway.
-    */
-  // public: codegen'd (de)serializers live outside this object and cannot
-  // touch private classes
-  final case class HeadIn(host: String, url: String, url_hash: Long,
-      seq: Long, priority: Int, qr: Long, head_depth: Long)
-  final case class HeadOut(tag: Int, host: String, url: String,
-      url_hash: Long, seq: Long, priority: Int, qr: Long, bp: Int, bs: Long)
-
-  def buildHead(queueAlive: DataFrame, hostState: DataFrame,
-      roundMillis: Long): (DataFrame, DataFrame) = {
-    val (_, headAdd, headmeta) = shapeAndBuildHead(queueAlive, hostState, roundMillis)
-    (headAdd, headmeta)
-  }
-
-  /** The fold's single full-queue pass: ONE host-bucketed shuffle +
+    *
+    * The fold's single full-queue pass: ONE host-bucketed shuffle +
     * in-partition sort serves BOTH outputs that need it — the committed
     * `queue_add` segment (hosts co-located, rank-ordered row groups, so
     * row-group (priority, seq) min/max stats stay tight and any emergency
@@ -435,7 +429,7 @@ object CrawlJob {
 
   /** Is (priority, seq) strictly before the host's head boundary? A host
     * with no boundary row (bp null after the left join) keeps everything in
-    * head — absence IS the β = ∞ encoding ([[buildHead]]).
+    * head — absence IS the β = ∞ encoding ([[shapeAndBuildHead]]).
     */
   private def beforeBoundary: Column =
     col("bp").isNull ||
@@ -732,7 +726,7 @@ object CrawlJob {
       if (isCompaction && memberCount > SeenSet.DefaultShards * bloomCap / 2)
         math.max(2L * memberCount / SeenSet.DefaultShards, InitialBloomCapPerShard)
       else bloomCap
-    val blooms = timed(if (isCompaction) "fold:members+bloom-rebuild" else "round:bloom-delta") {
+    val blooms =
       (if (isCompaction) SeenSet.buildBloomsDf(membersEnd, newBloomCap)
        else if (newCount == 0) probeBlooms
        else SeenSet.mergeBlooms(probeBlooms, SeenSet.bloomDelta(newEntries, bloomCap)))
@@ -740,7 +734,6 @@ object CrawlJob {
         // checkpoint job makes the committed segment repeat byte for byte
         .sortWithinPartitions("shard")
         .localCheckpoint(true) // ≤ shards blob rows
-    }
 
     // ---- 8. host counters: last-writer-wins delta rows --------------------
     val dOrd = withOrd.groupBy("host").agg(count(lit(1)).as("d_ord"))
@@ -802,14 +795,13 @@ object CrawlJob {
       // checkpointed) output IS the committed queue_add segment, and the
       // head cache is provisioned from the same sorted partitions — the r4
       // fold shuffled the queue once here and again at commit
-      val (queueShaped, headEnd, headmetaEnd) = timed("fold:build-head") {
+      val (queueShaped, headEnd, headmetaEnd) =
         shapeAndBuildHead(queueEnd, hostState, cfg.roundMillis)
-      }
       // the fold's write wave also carries the fingerprint store's fresh
       // base generation from the alive membership (the same rows the
       // member_add rewrite persists) — written before the publish (crash ⇒
       // deterministic re-run rewrites it)
-      timed("fold:commit")(state.commit(Map(
+      state.commit(Map(
         "member_add" -> membersEnd.withColumn("r", lit(round)),
         "member_del" -> emptyDelDelta,
         "queue_add" -> queueShaped,
@@ -824,7 +816,7 @@ object CrawlJob {
         "blooms" -> blooms,
         "meta" -> meta),
         alongside = sinkWrites :+ (() => MemberStore.writeBase(membersEnd,
-          memberStoreRoot(state), round, SeenSet.DefaultShards))))
+          memberStoreRoot(state), round, SeenSet.DefaultShards)))
     } else {
       // O(delta) fingerprint-store maintenance: this round's add/del file
       // set, in the wave before the publish that references it
@@ -848,20 +840,6 @@ object CrawlJob {
     if (emergencyRefill) schedSource.unpersist()
     metaEnd
   }
-
-  /** Opt-in coarse phase timing (set GRAFT_TIMING=1): prints wall time per
-    * fold phase so a DriveQueueScale run can attribute the amortized fold
-    * cost to queue fold / head build / store base / bloom rebuild / commit.
-    * Inert (no clock read, no output) unless the env var is set.
-    */
-  @inline private def timed[T](name: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"TIMING $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** Drop shard-local bloom blob directories older than `keep` rounds behind
     * the latest (file-mode probe transport only; a no-op otherwise).

@@ -29,15 +29,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("dup_count"))
 
-  /** Character k-shingle hashes of a text column (empty-safe). */
-  def shingleHashes(text: Column, k: Int): Column = {
-    val n = length(text)
-    when(n < k, array(xxhash64(text)))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), n - k + 1),
-        i => xxhash64(text.substr(i, lit(k))))))
-  }
-
   /** Word n-gram shingle hashes. For natural-ish text, word shingles keep
     * cross-document Jaccard low (char shingles over a small vocabulary make
     * *everything* look like a near-dup, which explodes LSH buckets
@@ -232,6 +223,13 @@ object Dedup {
     * as the final test, so rounding is monotone and no qualifying pair can
     * be dropped. Same integer counts → same double division → bit-identical
     * output.
+    *
+    * Approximation contract: tokens are compared as their xxhash64 values,
+    * not as strings. If two distinct tokens inside one pair's union share a
+    * 64-bit hash, they count as one token and that pair's `jaccard` differs
+    * from the string Jaccard. By the birthday bound the chance is about
+    * U²/2⁶⁵ for a union of U distinct tokens: ~1e-12 per pair at U ≈ 6,000,
+    * far less for ordinary documents.
     */
   def tokenJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double): DataFrame = {
@@ -239,12 +237,10 @@ object Dedup {
     // instead of strings (guide §2.3 "narrower types"): the per-pair merge
     // scan compares 8-byte longs instead of UTF8 strings and the broadcast
     // side shrinks by the token text — measured 3.86 s -> 0.92 s on the
-    // sf0.1 block join (DriveJaccardPerf). |distinct hashes| = |distinct
-    // tokens| and hash-equality = token-equality absent a 64-bit xxhash64
-    // collision inside one pair's union (~1e-12 at this vocabulary;
-    // DedupSpec diff-tests the two forms, and the DuckDB oracle replays the
-    // STRING jaccard, so any collision would fail the driver's hash check
-    // rather than pass silently).
+    // sf0.1 block join. The collision contract is in the scaladoc; DedupSpec
+    // diff-tests the two forms, and the DuckDB oracle replays the STRING
+    // jaccard, so a collision would fail the oracle compare rather
+    // than pass silently.
     val base = graft.functions.Parallelize.spreadForCompute(
       df.select((col(idCol) +: col(textCol) +: blockCols.map(col)): _*))
       .select((col(idCol).as("id") +:
@@ -442,13 +438,8 @@ object Dedup {
     var done = prev._1 == 0L
     var i = 0
     while (!done && i < maxAlternations) {
-      val t0 = System.nanoTime()
       val ss = ccAlternate(e).localCheckpoint(true)
       val cur = checksum(ss)
-      // opt-in observability (same env contract as CrawlJob's fold timing):
-      // per-alternation edge count + wall time, inert when unset
-      if (sys.env.contains("GRAFT_TIMING"))
-        println(f"TIMING cc:alt$i edges=${cur._1} ${(System.nanoTime() - t0) / 1e9}%.2f s")
       done = cur == prev
       prev = cur
       e = ss

@@ -265,10 +265,4 @@ object ImageGen {
       else spark.sparkContext.defaultParallelism
     spark.range(0, n, 1, parts).as[Long].mapPartitions(_.map(rowOf))
   }
-
-  /** Generate + write as a snapshot-committed table (the engine's input). */
-  def writeTable(spark: SparkSession, dir: String, n: Long): Unit = {
-    val t = new graft.tables.SnapshotTable(dir)
-    t.commit(Map("images" -> generate(spark, n).toDF()))
-  }
 }

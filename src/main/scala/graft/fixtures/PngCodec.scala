@@ -14,8 +14,8 @@ import java.util.zip.{CRC32, Deflater}
   * every scanline, one zlib stream at `level` (default 0). Level 0 is not a
   * quality compromise on THIS payload: the generator's per-pixel noise
   * makes the scanlines incompressible — measured 3104 B → 3115 B at level
-  * 9 (DriveImagePerf `deflate_lvl*`), i.e. deflate gains 0% at every
-  * level while costing 30 µs (level 1-9) vs 3.5 µs (level 0) per image.
+  * 9, i.e. deflate gains 0% at every level while costing 30 µs (level 1-9)
+  * vs 3.5 µs (level 0) per image.
   * The bytes differ from ImageIO's (different filter/level choices of the
   * same format, near-identical SIZE because neither can compress noise)
   * but decode to BIT-identical pixels through the same JDK ImageIO

@@ -24,6 +24,10 @@ import org.apache.spark.sql.DataFrame
   * SPARK-23207 — and every consumer here is row-order-agnostic).
   */
 object Parallelize {
+  /** `df` must be scan-only (scan, filter, project). The partition count is
+    * read from `df.rdd`, and under AQE building that RDD runs every upstream
+    * shuffle stage to completion, in a job of its own, before this returns.
+    */
   def spreadForCompute(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df

@@ -1,12 +1,12 @@
 package graft.schema
 
-/** Canonical schemas of the crawl engine (SURVEY.md §1, BASELINE.json input_hint).
+/** Typed rows the fixtures build (SURVEY.md §1, BASELINE.json input_hint).
   *
   * The target input table is the image+caption shape from `input_hint`:
   * (image_id string, bytes binary, w int, h int, fmt string, caption string,
-  * phash long). The frontier/scheduler state mirrors the reference's
-  * block-walk state (height cursor, hash window, checkpoint) re-keyed to
-  * (host, seq, url_hash) — see SURVEY.md §1.4 for the concept mapping.
+  * phash long). The crawl state tables are untyped DataFrames whose columns
+  * [[graft.crawl.CrawlJob]] documents; SURVEY.md §1.4 maps them onto the
+  * reference's block-walk state (height cursor, hash window, checkpoint).
   */
 
 /** One row of the image+caption source table (BASELINE.json input_hint). */
@@ -19,23 +19,6 @@ final case class ImageRow(
     caption: String,
     phash: Long)
 
-/** A frontier entry: one URL awaiting (or having completed) fetch.
-  *
-  * `seq` is the per-host monotone sequence number — the analog of the
-  * reference's block height (/root/reference/common/blocks.go:93). `url_hash`
-  * is xxhash64 of the canonicalized URL, the analog of the block hash.
-  * `parent_hash` is the url_hash of the page that discovered this URL — the
-  * analog of parentHash lineage (/root/reference/common/blocks.go:95-96).
-  */
-final case class FrontierEntry(
-    url_hash: Long,
-    url: String,
-    host: String,
-    seq: Long,
-    priority: Int,
-    parent_hash: Long,
-    depth: Int)
-
 /** Per-host politeness + robots side input (broadcast join side; the analog
   * of per-topic filter params /root/reference/kafka/kafka.go:5-9).
   */
@@ -44,66 +27,3 @@ final case class HostState(
     robots_disallow: Seq[String], // path-prefix rules
     min_delay_ms: Long,
     budget: Int)                  // max fetches per batch
-
-/** A scheduled fetch: frontier entry + the batch-round it was committed in
-  * and its within-host commit position (the serial-commit order analog of
-  * /root/reference/syncronizer/synchronizer.go:14-36).
-  */
-final case class Scheduled(
-    url_hash: Long,
-    url: String,
-    host: String,
-    seq: Long,
-    priority: Int,
-    round: Long,
-    ord: Long)
-
-/** Result of one fetch: the page payload (an image+caption row id) plus
-  * discovered out-links. `ok=false` marks an injected/transient fetch
-  * failure, which must trigger prefix-commit (SURVEY.md §4 invariant 1).
-  */
-final case class FetchResult(
-    url_hash: Long,
-    url: String,
-    host: String,
-    seq: Long,
-    ok: Boolean,
-    image_id: String,
-    outlinks: Seq[String])
-
-/** Sink envelope — analog of Payload{Status, Block, Version}
-  * (/root/reference/kafka/kafka.go:16-20). status ∈ {ACCEPTED, DROPPED}.
-  */
-final case class Envelope(
-    status: String,
-    url_hash: Long,
-    url: String,
-    host: String,
-    seq: Long,
-    round: Long,
-    version: Int)
-
-/** One row of the checkpointed per-host lookback window — the analog of the
-  * 128-deep block cache (/root/reference/cache/stack.go, state/state.go).
-  * Bounded to the last K seqs per host; used for revision (reorg) diffs.
-  */
-final case class WindowEntry(
-    host: String,
-    seq: Long,
-    url_hash: Long,
-    parent_hash: Long)
-
-/** Per-host cursor: highest committed seq (the local head). */
-final case class HostCursor(host: String, head_seq: Long)
-
-/** Per-partition lineage + fetch metrics, written each round
-  * (north_rule: "per-partition lineage + metrics").
-  */
-final case class PartitionMetrics(
-    round: Long,
-    partition_id: Int,
-    n_fetched: Long,
-    n_failed: Long,
-    n_bytes: Long,
-    min_seq: Long,
-    max_seq: Long)

@@ -13,4 +13,6 @@ object SparkTestBase {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+  /** The larger oracled scale factor, beside [[sfDir]]. */
+  val sf01Dir = s"${new java.io.File(sfDir).getParent}/sf0.01"
 }

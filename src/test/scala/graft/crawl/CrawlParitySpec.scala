@@ -304,7 +304,7 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("capacity growth across a resume triggers the emergency head re-provision and stays exact") {
     // a frontier deep enough that heads are truncated (finite β) under the
-    // SMALL capacities, seeded directly (the DriveQueueScale shape)
+    // SMALL capacities, seeded directly through `seedSnapshot`
     val cfgSmall = graft.fixtures.WebConfig(numHosts = 16, rounds = 3, roundMillis = 100L)
     val cfgBig = cfgSmall.copy(roundMillis = 10000L)
     def queueAdd = spark.range(0, 50000, 1, 8)
@@ -359,7 +359,7 @@ class CrawlParitySpec extends AnyFunSuite {
       .select(format_string("h%02d.test", col("id").cast("int")).as("host"),
         (col("id") % 7 + 1).as("min_delay_ms"), (lit(20L) + col("id") % 30).as("budget"))
     val roundMillis = 100L
-    val (headAdd, headmeta) = CrawlJob.buildHead(q, hostState, roundMillis)
+    val (_, headAdd, headmeta) = CrawlJob.shapeAndBuildHead(q, hostState, roundMillis)
     assert(headmeta.count() > 0, "fixture too shallow: no host got a finite boundary")
     // the head really is bounded: ≤ capacity × HeadDepthRounds rows per host
     val caps = hostState.select(col("host"),

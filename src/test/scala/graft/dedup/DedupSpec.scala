@@ -129,6 +129,18 @@ class DedupSpec extends AnyFunSuite {
     assert(capped === uncapped)
   }
 
+  test("simhash default bucket cap never fires on the oracled documents tables") {
+    // the DuckDB oracles replay the banding UNCAPPED, so a cap that fired at
+    // an oracled scale factor would make the compare diverge
+    val defaultMaxBucket = 1000L // simhashNearDups' default `maxBucket`
+    for (sf <- Seq(SparkTestBase.sfDir, SparkTestBase.sf01Dir)) {
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val largest = Dedup.simhashOversizeBuckets(docs, "doc_id", "text", maxBucket = 0L)
+        .agg(max("bucket_n")).head().getLong(0)
+      assert(largest <= defaultMaxBucket, s"$sf: largest simhash band bucket $largest")
+    }
+  }
+
   test("embedding near-dups: planted near-identical vectors found via sign-LSH") {
     val rnd = new scala.util.Random(7)
     val base = (0 until 50).map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
