@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   *    refactor NOTHING reads it per round — scheduling reads the bounded
   *    head cache below; the full log is only folded at compaction
   *    (amortized 1/interval) and read by tests and benchmarks.
-  *  - `head_add`/`head_del` + `headmeta`: the per-host HEAD CACHE — the
+  *  - `head_add` + `headmeta`: the per-host HEAD CACHE — the
   *    frontier analog of the reference's sequential cursor
   *    (/root/reference/crawler/blocks.go:50,60). `headmeta` pins a per-host
   *    rank boundary β (on the (priority desc, seq asc) order); the head
@@ -66,7 +66,8 @@ import org.apache.spark.sql.functions._
   *    records the `roundMillis` the head was provisioned with (`head_ms`),
   *    and the guard query runs only while the configured value exceeds it:
   *    capacity is monotone in `roundMillis` and budgets are static
-  *    `hoststate`, so otherwise no host can be shallow.
+  *    `hoststate`, so otherwise no host can be shallow. The head's
+  *    tombstones are the queue's (`queue_del`, see [[readHead]]).
   *  - `window_add`/`window_del`: the K-deep revision window, delta-committed
   *    — adds are this round's commits/replacements, dels are revisions and
   *    beyond-K evictions (both O(fetched)). The r3 design rewrote the full
@@ -75,17 +76,18 @@ import org.apache.spark.sql.functions._
   *    wins by round — one row per ACTIVE host per round instead of the r3
   *    full O(hosts) rewrite.
   *  - `hoststate`: static per-host robots/politeness state, seeded once and
-  *    carried; broadcast while small, host-keyed shuffle join at the
-  *    10^8-host regime (`broadcastHostState = false`).
+  *    carried. Its joins carry no hint: the planner broadcasts it while it
+  *    is small, and `spark.sql.autoBroadcastJoinThreshold` turns them into
+  *    host-keyed shuffle joins at the 10^8-host regime.
   *  - `blooms`: sharded membership blooms, OR-merged O(delta) per round.
   *
   * Scale notes (the point of the exercise):
   *  - NO per-round O(total-frontier) scan remains anywhere: scheduling reads
   *    the bounded head; discovery dedup probes the membership blooms
-  *    map-side, and only maybe-member candidates ride the exact anti-join
-  *    (whose big side is the member log — on a real catalog a table
-  *    bucketed by url_hash, so the storage-partitioned join moves only the
-  *    candidates);
+  *    map-side, and only maybe-member candidates are resolved exactly, by a
+  *    probe of the [[MemberStore]] fingerprint blobs (immutable between
+  *    folds) — every round, whatever the crawl's size
+  *    ([[SeenSet.filterNewStore]]);
   *  - the robots gate runs ONCE, at enqueue time, over the round's O(delta)
   *    discoveries — the 10^10-row queue is never re-purged;
   *  - fetch is the only executor-heavy stage; it runs data-parallel over the
@@ -134,11 +136,12 @@ object CrawlJob {
   /** Run (or resume) the crawl for `cfg.rounds` rounds against the synthetic
     * web, checkpointing into `stateDir` and appending emits/pages under
     * `sinkDir`. Returns the round it stopped after.
+    *
+    * @param bloomThreshold unread; kept only for callers that pass it by name
     */
   def run(spark: SparkSession, cfg: WebConfig, stateDir: String, sinkDir: String,
-      upToRound: Option[Long] = None, bloomThreshold: Long = 200000L,
-      maxBloomBroadcastBytes: Long = 64L << 20,
-      broadcastHostState: Boolean = true): Long = {
+      upToRound: Option[Long] = None, bloomThreshold: Long = 0L,
+      maxBloomBroadcastBytes: Long = 64L << 20): Long = {
     import spark.implicits._
     val state = new SnapshotTable(stateDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(sinkDir))
@@ -148,20 +151,18 @@ object CrawlJob {
     // the snapshot table alongside the queue (same host key — on a real
     // catalog both are bucketed by host so the capacity join co-locates),
     // carried forward by every commit, and read back on resume. At 10^8
-    // hosts this is the table the gate/capacity joins shuffle against when
-    // `broadcastHostState` is off.
+    // hosts this is the table the gate/capacity joins shuffle against.
     var meta: Meta = state.latestSnapshot match {
       case Some(_) => state.read(spark, "meta").as[Meta].head()
       case None =>
         seedState(spark, cfg, state,
-          spark.createDataset(SyntheticWeb.hostStates(cfg)).toDF(), broadcastHostState)
+          spark.createDataset(SyntheticWeb.hostStates(cfg)).toDF())
     }
     val hostState = state.read(spark, "hoststate")
     val endRound = math.min(upToRound.getOrElse(cfg.rounds.toLong), cfg.rounds.toLong)
 
     while (meta.round < endRound) {
-      meta = runRound(spark, cfg, meta, state, sinkDir, hostState,
-        bloomThreshold, maxBloomBroadcastBytes, broadcastHostState)
+      meta = runRound(spark, cfg, meta, state, sinkDir, hostState, maxBloomBroadcastBytes)
     }
     endRound
   }
@@ -172,7 +173,7 @@ object CrawlJob {
     * disallowed seed never consumes a sequence number.
     */
   private def seedState(spark: SparkSession, cfg: WebConfig, state: SnapshotTable,
-      hostState: DataFrame, broadcastHostState: Boolean): Meta = {
+      hostState: DataFrame): Meta = {
     // F2 empty-response guard: the reference aborts at startup when its
     // start block comes back empty ("block not found",
     // /root/reference/cmd/blockspiderd/main.go:110-115) — a crawl with no
@@ -181,7 +182,7 @@ object CrawlJob {
     require(rawSeeds.nonEmpty, "cold start with no seeds (F2 guard: nothing to crawl)")
     import spark.implicits._
     val seeds = seeds2Df(spark, rawSeeds)
-    val queueAdd = Scheduler.robotsGate(seeds, hostState, broadcastHostState)
+    val queueAdd = Scheduler.robotsGate(seeds, hostState)
       .withColumn("seq",
         row_number().over(Window.partitionBy(col("host")).orderBy(col("seed_idx"))).cast("long"))
       .select("host", "url", "url_hash", "seq", "priority")
@@ -234,7 +235,7 @@ object CrawlJob {
       appendOnly = Map(
         "member_add" -> memberAdd, "member_del" -> emptyDel,
         "queue_add" -> queueShaped, "queue_del" -> emptyDel,
-        "head_add" -> headAdd, "head_del" -> emptyDel,
+        "head_add" -> headAdd,
         "window_add" -> emptyWindow, "window_del" -> emptyWDel,
         "hostctr_add" -> hostctr),
       // the exact fingerprint store's first base generation, in the same
@@ -265,6 +266,8 @@ object CrawlJob {
     * by revisions·K per interval) so the planner resolves membership with a
     * broadcast-hash join on its own; no forced hint — at a pathological
     * retraction volume it degrades to a shuffle join instead of an OOM.
+    * O(total): only the compaction fold, tests and benchmark checks read
+    * it; a steady round dedups against [[MemberStore]] instead.
     */
   def readMembers(spark: SparkSession, state: SnapshotTable): DataFrame = {
     val adds = state.read(spark, "member_add")
@@ -305,11 +308,12 @@ object CrawlJob {
   def readQueue(spark: SparkSession, stateDir: String): DataFrame =
     readQueue(spark, new SnapshotTable(stateDir))
 
-  /** The alive per-host head cache (same event-log shape as the queue; head
-    * dels are exactly the queue dels — this round's committed fetches).
+  /** The alive per-host head cache: `head_add` minus the queue's tombstones.
+    * Head dels are exactly the queue dels (this round's committed fetches),
+    * so the head keeps no del log of its own.
     */
   def readHead(spark: SparkSession, state: SnapshotTable): DataFrame =
-    readLog(state.read(spark, "head_add"), state.read(spark, "head_del"))
+    readLog(state.read(spark, "head_add"), state.read(spark, "queue_del"))
 
   private def readLog(adds: DataFrame, dels: DataFrame): DataFrame =
     adds.join(dels.groupBy("url_hash").agg(max("dr").as("dr")), Seq("url_hash"), "left")
@@ -456,8 +460,7 @@ object CrawlJob {
     */
   private def runRound(spark: SparkSession, cfg: WebConfig, meta0: Meta,
       state: SnapshotTable, sinkDir: String, hostState: DataFrame,
-      bloomThreshold: Long, maxBloomBroadcastBytes: Long,
-      broadcastHostState: Boolean): Meta = {
+      maxBloomBroadcastBytes: Long): Meta = {
     import spark.implicits._
     val round = meta0.round + 1
 
@@ -562,8 +565,7 @@ object CrawlJob {
     val schedSource =
       if (emergencyRefill) readQueue(spark, state).persist()
       else headAlive
-    val scheduled = Scheduler.schedule(schedSource.drop("qr"), hostState,
-        cfg.roundMillis, broadcastHostState)
+    val scheduled = Scheduler.schedule(schedSource.drop("qr"), hostState, cfg.roundMillis)
       .select("host", "url", "url_hash", "seq", "priority", "host_rank")
       .as[SchedRow]
 
@@ -622,8 +624,8 @@ object CrawlJob {
       .select("host", "ord")
     winDelParts += evictDels
     // queue/head removal is a DELTA: tombstone this round's committed
-    // fetches in both logs (they are the same rows — the head is a cache of
-    // the queue's top ranks). Failed fetches stay alive in both for retry.
+    // fetches in `queue_del`, which the head reads as well (the head is a
+    // cache of the queue's top ranks). Failed fetches stay alive for retry.
     val queueDelDelta = withOrd.select(col("url_hash"), lit(round).as("dr"))
       .localCheckpoint(true)
 
@@ -638,18 +640,15 @@ object CrawlJob {
       .withColumn("priority", pmod(xxhash64(col("url")), lit(10)).cast("int"))
       .select("host", "url", "url_hash", "path", "priority")
     // enqueue-time robots gate over this round's O(delta) discoveries
-    val candidatesAllowed = Scheduler
-      .robotsGate(candidatesRaw, hostState, broadcastHostState)
-      .drop("path")
+    val candidatesAllowed = Scheduler.robotsGate(candidatesRaw, hostState).drop("path")
 
     // effective membership for discovery dedup = base − this round's
     // retractions + this round's replacement adds. (Fetches moved rows
     // queue→seen without changing membership; new entries are the OUTPUT of
-    // this dedup and join the set for the next round.) On the bloom path
-    // the base comes from the exact fingerprint store ([[MemberStore]],
-    // probed in O(maybe-seen) against blobs immutable between folds); the
-    // O(total) parquet member log is read ONLY by the exact small-state
-    // path and the compaction fold — no steady-state round scans it.
+    // this dedup and join the set for the next round.) The base comes from
+    // the exact fingerprint store ([[MemberStore]], probed in O(maybe-seen)
+    // against blobs immutable between folds); the O(total) parquet member
+    // log is read ONLY by the compaction fold — no steady round scans it.
     val emptyHashDelta = spark.emptyDataset[(Long, Long)].toDF("url_hash", "r")
     val emptyDelDelta = spark.emptyDataset[(Long, Long)].toDF("url_hash", "dr")
     // O(revised hosts · depth) each; a round without revisions has none, and
@@ -662,9 +661,6 @@ object CrawlJob {
       }
     val (replAdds, replCount) = delta(addParts.toSeq, emptyHashDelta)
     val (delsDelta, delsCount) = delta(delParts.toSeq, emptyDelDelta)
-    lazy val membersView = readMembers(spark, state)
-      .join(delsDelta.select("url_hash"), Seq("url_hash"), "left_anti")
-      .unionByName(replAdds.select("url_hash"))
 
     // probe blooms = persisted ∪ this round's replacement adds (tiny);
     // committed blooms additionally OR in the new entries below.
@@ -674,21 +670,17 @@ object CrawlJob {
          SeenSet.bloomDelta(replAdds, bloomCap)))
         .localCheckpoint(true) // ≤ shards blob rows; probe AND commit base
 
-    val notMember =
-      if (memberCount0 >= bloomThreshold) {
-        // probe transport: broadcast while the blob set is small; shard-local
-        // files once it is not (at 10^10 keys the blobs are ~GBs — they must
-        // not ship to every executor)
-        val estBytes = SeenSet.DefaultShards * BloomSketch.sizeBytes(bloomCap, SeenSet.DefaultFpp)
-        val provider =
-          if (estBytes <= maxBloomBroadcastBytes) SeenSet.broadcastProvider(spark, probeBlooms)
-          else SeenSet.writeShardFiles(probeBlooms, f"${state.dir}/bloomblobs/round-$round%06d")
-        SeenSet.filterNewStore(spark, candidatesAllowed,
-          MemberStore.providerAsOf(memberStoreRoot(state), round - 1), provider,
-          delsDelta, replAdds)
-      } else SeenSet.filterNewExact(candidatesAllowed, membersView)
-
-    val fresh = notMember
+    // probe transport: broadcast while the blob set is small; shard-local
+    // files once it is not (at 10^10 keys the blobs are ~GBs — they must
+    // not ship to every executor)
+    val estBytes = SeenSet.DefaultShards * BloomSketch.sizeBytes(bloomCap, SeenSet.DefaultFpp)
+    val provider =
+      if (estBytes <= maxBloomBroadcastBytes) SeenSet.broadcastProvider(spark, probeBlooms)
+      else SeenSet.writeShardFiles(probeBlooms, f"${state.dir}/bloomblobs/round-$round%06d")
+    val fresh = SeenSet
+      .filterNewStore(spark, candidatesAllowed,
+        MemberStore.providerAsOf(memberStoreRoot(state), round - 1), provider,
+        delsDelta, replAdds)
       .withColumn("cand_rank",
         row_number().over(Window.partitionBy(col("host")).orderBy(col("url_hash"))).cast("long"))
 
@@ -713,7 +705,10 @@ object CrawlJob {
     // rounds never evaluate it. Eager-checkpointed on first use: the fold
     // consumes it three times (bloom rebuild, member_add rewrite, store
     // base) and must not re-read the parquet log for each
-    lazy val membersEnd = membersView.unionByName(newEntries.select("url_hash"))
+    lazy val membersEnd = readMembers(spark, state)
+      .join(delsDelta.select("url_hash"), Seq("url_hash"), "left_anti")
+      .unionByName(replAdds.select("url_hash"))
+      .unionByName(newEntries.select("url_hash"))
       .localCheckpoint(true)
     val isCompaction = round % SeenCompactionInterval == 0
 
@@ -807,7 +802,6 @@ object CrawlJob {
         "queue_add" -> queueShaped,
         "queue_del" -> emptyDelDelta,
         "head_add" -> headEnd,
-        "head_del" -> emptyDelDelta,
         "headmeta" -> headmetaEnd,
         "window_add" -> window.join(evictDels, Seq("host", "ord"), "left_anti")
           .localCheckpoint(true),
@@ -819,16 +813,19 @@ object CrawlJob {
           memberStoreRoot(state), round, SeenSet.DefaultShards)))
     } else {
       // O(delta) fingerprint-store maintenance: this round's add/del file
-      // set, in the wave before the publish that references it
+      // set, in the wave before the publish that references it. Without
+      // revisions there are no dels: `member_del` carries its segments
+      // forward and the store writes no del kind.
+      val dels = if (delParts.isEmpty) None else Some(delsDelta)
       state.commit(
         Map("blooms" -> blooms, "meta" -> meta),
         appendOnly = Map(
-          "member_add" -> addsDelta, "member_del" -> delsDelta,
+          "member_add" -> addsDelta,
           "queue_add" -> newEntries, "queue_del" -> queueDelDelta,
-          "head_add" -> headAddDelta, "head_del" -> queueDelDelta,
+          "head_add" -> headAddDelta,
           "window_add" -> winAdds, "window_del" -> winDels,
-          "hostctr_add" -> hostctrDelta),
-        alongside = sinkWrites :+ (() => MemberStore.writeDelta(addsDelta, delsDelta,
+          "hostctr_add" -> hostctrDelta) ++ dels.map("member_del" -> _),
+        alongside = sinkWrites :+ (() => MemberStore.writeDelta(addsDelta, dels,
           memberStoreRoot(state), round, SeenSet.DefaultShards)))
     }
     state.expireOldSnapshots(keep = 2)

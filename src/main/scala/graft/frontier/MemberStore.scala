@@ -110,15 +110,16 @@ object MemberStore {
   }
 
   /** Write one round's DELTA file set (adds + dels, both O(delta), written
-    * concurrently).
+    * concurrently). `dels = None` (a round the caller knows has none) writes
+    * no del kind, which reads as empty.
     */
-  def writeDelta(adds: DataFrame, dels: DataFrame, root: String, round: Long,
+  def writeDelta(adds: DataFrame, dels: Option[DataFrame], root: String, round: Long,
       shards: Int): Unit = {
     val dir = deltaDir(root, round)
-    SnapshotTable.concurrently(Seq(
-      () => writeKind(adds.select("url_hash"), dir, "add", shards),
-      () => writeKind(dels.select("url_hash"), dir, "del", shards)))
-    // marker: the delta set for this round is completely written (both kinds)
+    SnapshotTable.concurrently(
+      (() => writeKind(adds.select("url_hash"), dir, "add", shards)) +:
+        dels.toSeq.map(d => () => writeKind(d.select("url_hash"), dir, "del", shards)))
+    // marker: the delta set for this round is completely written
     java.nio.file.Files.writeString(dir.resolve("DONE"), "")
   }
 

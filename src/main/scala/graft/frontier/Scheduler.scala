@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * frontier entry whose path matches any of its host's disallow prefixes
   * never enters the queue (the per-sink predicate analog,
   * /root/reference/crawler/blocks.go:202-228). Gating at enqueue instead of
-  * per-round means the 10^10-row queue is never re-purged: the rules ride a
-  * broadcast join over only the round's O(delta) discoveries.
+  * per-round means the 10^10-row queue is never re-purged: the rules join
+  * only the round's O(delta) discoveries.
   *
   * Scale shape: top-k per host is computed in TWO phases so a hot host
   * (Zipf head) never concentrates on one task before reduction — phase 1
@@ -47,19 +47,15 @@ object Scheduler {
     * column is consumed here and does not survive. Inner join: an entry for
     * a host with no known state never schedules anyway, so it never enqueues.
     *
-    * @param broadcastHostState hint the host-state side as broadcast — right
-    *   while one row per host fits an executor (up to ~10^7 hosts); a
-    *   10^8-host crawl flips this off and relies on a co-bucketed shuffle
-    *   join instead (the host-state table and the queue share the host key).
+    * @param hostState one row per host; the join carries no hint, so the
+    *   planner broadcasts it while it is small, and a 10^8-host crawl gets
+    *   a host-keyed shuffle join from `spark.sql.autoBroadcastJoinThreshold`
+    *   (the host-state table and the queue share the host key).
     */
-  def robotsGate(entries: DataFrame, hostState: DataFrame,
-      broadcastHostState: Boolean = true): DataFrame = {
-    val hs = hostState.select(col("host"), col("robots_disallow"))
-    val side = if (broadcastHostState) broadcast(hs) else hs
-    entries.join(side, Seq("host"), "inner")
+  def robotsGate(entries: DataFrame, hostState: DataFrame): DataFrame =
+    entries.join(hostState.select(col("host"), col("robots_disallow")), Seq("host"), "inner")
       .filter(!robotsDisallowed(col("path"), col("robots_disallow")))
       .drop("robots_disallow")
-  }
 
   /** Per-host fetch capacity for one round of `roundMillis`. */
   def capacity(budget: Column, minDelayMs: Column, roundMillis: Long): Column =
@@ -69,16 +65,14 @@ object Scheduler {
   /** Select this round's fetch set from an (already robots-gated) queue.
     *
     * @param queue     frontier entries: url_hash, url, host, seq, priority
-    * @param hostState host, min_delay_ms, budget — one row per host
-    * @param broadcastHostState see [[robotsGate]]
+    * @param hostState host, min_delay_ms, budget — one row per host; joined
+    *   without a hint, like the gate's ([[robotsGate]])
     * @return scheduled rows with host_rank (1-based per-host commit order)
     */
-  def schedule(queue: DataFrame, hostState: DataFrame, roundMillis: Long,
-      broadcastHostState: Boolean = true): DataFrame = {
+  def schedule(queue: DataFrame, hostState: DataFrame, roundMillis: Long): DataFrame = {
     val hs = hostState.select(col("host"), col("min_delay_ms"), col("budget"))
-    val side = if (broadcastHostState) broadcast(hs) else hs
     val gated = queue
-      .join(side, Seq("host"), "inner")
+      .join(hs, Seq("host"), "inner")
       .withColumn("cap", capacity(col("budget"), col("min_delay_ms"), roundMillis))
       .drop("min_delay_ms", "budget")
 

@@ -26,6 +26,12 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * in combination: bloom has no false negatives, and false positives are
   * re-checked by the join.
   *
+  * The crawl ([[graft.crawl.CrawlJob]]) dedups every round through
+  * [[filterNewStore]]: the same bloom in front of the exact [[MemberStore]]
+  * probe, so no round anti-joins a member table. [[filterNew]]'s parquet
+  * anti-join serves only `Bench`'s frozen frontier round and crawlbench's
+  * `frontier_round`.
+  *
   * Probe transport scales in two modes (chosen by total blob size):
   *  - broadcast: all shard blobs ship to every executor, probe is a codegen
   *    scalar [[BloomMightContain]] — fastest, right while blobs are small;
@@ -249,12 +255,6 @@ object SeenSet {
       needCheck.join(seen.select("url_hash"), Seq("url_hash"), "left_anti")
     definitelyNew.unionByName(confirmedNew)
   }
-
-  /** Plain exact dedup (no bloom) — used when the seen table is small or
-    * blooms are not yet built (cold start).
-    */
-  def filterNewExact(candidates: DataFrame, seen: DataFrame): DataFrame =
-    candidates.join(seen.select("url_hash"), Seq("url_hash"), "left_anti")
 
   /** Exact dedup against the [[MemberStore]] fingerprint blobs instead of a
     * parquet anti-join — the 10^10-member shape: the bloom rejects

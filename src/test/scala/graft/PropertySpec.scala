@@ -171,7 +171,7 @@ class PropertySpec extends AnyFunSuite {
       val bc = graft.frontier.SeenSet.broadcastProvider(spark, blooms)
       val dir = java.nio.file.Files.createTempDirectory(s"prop-blobs-$i").toString
       val fp = graft.frontier.SeenSet.writeShardFiles(blooms, dir)
-      val exact = graft.frontier.SeenSet.filterNewExact(candDf, seenDf)
+      val exact = candDf.join(seenDf, Seq("url_hash"), "left_anti")
         .as[Long].collect().toSet
       val viaBc = graft.frontier.SeenSet.filterNew(spark, candDf, seenDf, bc)
         .as[Long].collect().toSet

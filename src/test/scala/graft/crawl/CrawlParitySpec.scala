@@ -23,12 +23,17 @@ class CrawlParitySpec extends AnyFunSuite {
   private def tmp(): String = Files.createTempDirectory("graft-crawl").toString
 
   /** Spark jobs a steady `run(upToRound = r)` of a 40-seed crawl may start
-    * (73 with the write wave and recorded schemas; 85-87 before them).
+    * (70 measured, plus 2 of slack).
     */
-  private val JobsPerRoundCeiling = 75
+  private val JobsPerRoundCeiling = 72
 
   /** The method that runs the shallow-head guard query. */
   private val GuardFrame = "headIsShallow("
+
+  /** A file scan of a `member_add` segment in a physical plan description
+    * (a write's output path shows under `Arguments:`, not `Location:`).
+    */
+  private val MemberLogScan = "Location: [^\n]*/member_add".r
 
   private def emitKey(r: (Long, String, String, Long, Long, Long, String, Int)) = r
 
@@ -122,16 +127,22 @@ class CrawlParitySpec extends AnyFunSuite {
   test("steady rounds stay under a jobs ceiling, never run the shallow-head guard, and read recorded schemas") {
     val cfg = WebConfig(numSeeds = 40, rounds = 5)
     val stateDir = tmp(); val sinkDir = tmp()
-    CrawlJob.run(spark, cfg, stateDir, sinkDir, upToRound = Some(1), bloomThreshold = 0L)
+    CrawlJob.run(spark, cfg, stateDir, sinkDir, upToRound = Some(1))
     val rounds = (2L to 5L).map { r =>
       SparkEvents.during(spark.sparkContext)(CrawlJob.run(spark, cfg, stateDir, sinkDir,
-        upToRound = Some(r), bloomThreshold = 0L))._2
+        upToRound = Some(r)))._2
     }
     val jobs = rounds.map(_.jobs)
     assert(jobs.max <= JobsPerRoundCeiling, s"jobs per round: $jobs")
     assert(rounds.forall(_.sqlCallSites.forall(!_.contains(GuardFrame))),
       "the shallow-head guard ran although roundMillis never grew")
+    // dedup probes the member store; only the fold reads the O(total) log
+    val memberScans = rounds.flatMap(_.sqlPlans).flatMap(MemberLogScan.findFirstIn)
+    assert(memberScans.isEmpty, "a steady round scanned the member log")
     val st = new SnapshotTable(stateDir)
+    // the pattern does match a plan that reads the member log
+    assert(MemberLogScan.findFirstIn(CrawlJob.readMembers(spark, st).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)).isDefined)
     st.tableNames().foreach { n =>
       val inferred = spark.read.parquet(st.segmentsOf(st.latestSnapshot.get, n): _*)
       assert(st.read(spark, n).schema === inferred.schema, s"recorded schema of $n")
@@ -181,7 +192,7 @@ class CrawlParitySpec extends AnyFunSuite {
     // shuffle path a 10^8-host state table would force
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try CrawlJob.run(spark, cfg, stateDir, sinkDir, broadcastHostState = false)
+    try CrawlJob.run(spark, cfg, stateDir, sinkDir)
     finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert(engineEmits(sinkDir) === refEmits(ref))
   }
@@ -233,20 +244,11 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(CrawlJob.readQueue(spark, dir).count() === 0)
   }
 
-  test("bloom-accelerated dedup path gives identical results to exact path") {
-    val cfg = WebConfig(numSeeds = 40, rounds = 4)
-    val a = tmp(); val sa = tmp(); val b = tmp(); val sb = tmp()
-    CrawlJob.run(spark, cfg, a, sa, bloomThreshold = Long.MaxValue) // exact always
-    CrawlJob.run(spark, cfg, b, sb, bloomThreshold = 0L)            // bloom always
-    assert(engineEmits(sa) === engineEmits(sb))
-  }
-
   test("shard-local file-mode bloom probing gives identical results to broadcast mode") {
     val cfg = WebConfig(numSeeds = 40, rounds = 4)
     val a = tmp(); val sa = tmp(); val b = tmp(); val sb = tmp()
-    CrawlJob.run(spark, cfg, a, sa, bloomThreshold = 0L) // broadcast probe
-    CrawlJob.run(spark, cfg, b, sb, bloomThreshold = 0L,
-      maxBloomBroadcastBytes = 0L)                       // file-shard probe
+    CrawlJob.run(spark, cfg, a, sa)                              // broadcast probe
+    CrawlJob.run(spark, cfg, b, sb, maxBloomBroadcastBytes = 0L) // file-shard probe
     assert(engineEmits(sa) === engineEmits(sb))
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(b, "bloomblobs")), "file mode never wrote shard blobs")
@@ -264,7 +266,7 @@ class CrawlParitySpec extends AnyFunSuite {
   test("bloom state is maintained O(delta): persisted blooms contain every alive member") {
     val cfg = WebConfig(numSeeds = 30, rounds = 6)
     val stateDir = tmp(); val sinkDir = tmp()
-    CrawlJob.run(spark, cfg, stateDir, sinkDir, bloomThreshold = 0L)
+    CrawlJob.run(spark, cfg, stateDir, sinkDir)
     val state = new graft.tables.SnapshotTable(stateDir)
     val provider = SeenSetTestAccess.provider(spark, state)
     val members = CrawlJob.readMembers(spark, state).as[Long].collect()
@@ -285,10 +287,12 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(engineEmits(sinkDir) === refEmits(ref))
     val st = new graft.tables.SnapshotTable(stateDir)
     // both logs fold at the round-8 compaction: ≤ fold + 2 delta segments
-    for (t <- Seq("window_add", "window_del", "hostctr_add", "head_add", "head_del")) {
+    for (t <- Seq("window_add", "window_del", "hostctr_add", "head_add")) {
       val segs = st.segmentsOf(st.latestSnapshot.get, t)
       assert(segs.size <= 3, s"$t not folded at compaction: $segs")
     }
+    // the head reads the queue's tombstones; it keeps no del log of its own
+    assert(!st.tableNames().contains("head_del"))
     // post-compaction hostctr segments are per-ACTIVE-host deltas, strictly
     // smaller than the full counter table (the r3 full rewrite is gone)
     val ctrSegs = st.segmentsOf(st.latestSnapshot.get, "hostctr_add")

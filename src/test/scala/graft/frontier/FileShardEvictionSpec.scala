@@ -20,10 +20,9 @@ class FileShardEvictionSpec extends AnyFunSuite {
     val cfg = WebConfig(numSeeds = 40, rounds = 6)
     val stateDir = Files.createTempDirectory("shard-evict-state").toString
     val sinkDir = Files.createTempDirectory("shard-evict-sink").toString
-    // bloomThreshold = 0 + maxBloomBroadcastBytes = 0 forces the
-    // file-shard probe transport from round 1 — a new blob dir every round
-    graft.crawl.CrawlJob.run(spark, cfg, stateDir, sinkDir,
-      bloomThreshold = 0L, maxBloomBroadcastBytes = 0L)
+    // maxBloomBroadcastBytes = 0 forces the file-shard probe transport
+    // from round 1 — a new blob dir every round
+    graft.crawl.CrawlJob.run(spark, cfg, stateDir, sinkDir, maxBloomBroadcastBytes = 0L)
     assert(Files.isDirectory(java.nio.file.Paths.get(stateDir, "bloomblobs")),
       "file mode never wrote shard blobs — fixture no longer exercises the cache")
     val dirs = SeenSet.FileShardProvider.residentDirs

@@ -22,13 +22,13 @@ class MemberStoreSpec extends AnyFunSuite {
     // base at round 0: keys 0..99
     MemberStore.writeBase(df(0L until 100L), root, 0L, shards)
     // round 1: del 10..19, add 200..209
-    MemberStore.writeDelta(df(200L until 210L), df(10L until 20L), root, 1L, shards)
+    MemberStore.writeDelta(df(200L until 210L), Some(df(10L until 20L)), root, 1L, shards)
     // round 2: re-add 10..14 (revived after retraction), del 200..204,
     //          and a SAME-ROUND add+del for key 500 (add wins: r >= dr)
-    MemberStore.writeDelta(df((10L until 15L) :+ 500L), df(Seq(200L, 201L, 202L, 203L, 204L, 500L)),
+    MemberStore.writeDelta(df((10L until 15L) :+ 500L), Some(df(Seq(200L, 201L, 202L, 203L, 204L, 500L))),
       root, 2L, shards)
-    // round 3: empty delta (a round with no membership changes)
-    MemberStore.writeDelta(df(Nil), df(Nil), root, 3L, shards)
+    // round 3: empty delta (a round with no membership changes; no del kind)
+    MemberStore.writeDelta(df(Nil), None, root, 3L, shards)
 
     val p = MemberStore.providerAsOf(root, 3L)
     assert(p.baseRound === 0L && p.deltaRounds === Seq(1L, 2L, 3L) && p.shards === shards)
@@ -61,7 +61,7 @@ class MemberStoreSpec extends AnyFunSuite {
   test("probe agrees with the codegen expression over a DataFrame") {
     val root = java.nio.file.Files.createTempDirectory("memstore").toString
     MemberStore.writeBase(df(Seq(1L, 2L, 3L, -5L)), root, 0L, 4)
-    MemberStore.writeDelta(df(Seq(100L)), df(Seq(2L)), root, 1L, 4)
+    MemberStore.writeDelta(df(Seq(100L)), Some(df(Seq(2L))), root, 1L, 4)
     val p = MemberStore.providerAsOf(root, 1L)
     val got = df(Seq(1L, 2L, 3L, -5L, 100L, 7L))
       .withColumn("alive", MemberStore.member_alive(
@@ -74,9 +74,9 @@ class MemberStoreSpec extends AnyFunSuite {
   test("a fold supersedes deltas; provider picks the newest base at-or-before") {
     val root = java.nio.file.Files.createTempDirectory("memstore").toString
     MemberStore.writeBase(df(Seq(1L, 2L)), root, 0L, 4)
-    MemberStore.writeDelta(df(Seq(3L)), df(Seq(1L)), root, 1L, 4)
+    MemberStore.writeDelta(df(Seq(3L)), Some(df(Seq(1L))), root, 1L, 4)
     MemberStore.writeBase(df(Seq(2L, 3L)), root, 2L, 4) // the fold's alive set
-    MemberStore.writeDelta(df(Seq(4L)), df(Nil), root, 3L, 4)
+    MemberStore.writeDelta(df(Seq(4L)), None, root, 3L, 4)
     val p = MemberStore.providerAsOf(root, 3L)
     assert(p.baseRound === 2L && p.deltaRounds === Seq(3L))
     assert(!p.alive(1L) && p.alive(2L) && p.alive(3L) && p.alive(4L))
@@ -89,12 +89,12 @@ class MemberStoreSpec extends AnyFunSuite {
   test("refuses a round gap or an incomplete delta (exactness guard)") {
     val root = java.nio.file.Files.createTempDirectory("memstore").toString
     MemberStore.writeBase(df(Seq(1L)), root, 0L, 4)
-    MemberStore.writeDelta(df(Seq(2L)), df(Nil), root, 1L, 4)
+    MemberStore.writeDelta(df(Seq(2L)), None, root, 1L, 4)
     // round 2 missing entirely
-    MemberStore.writeDelta(df(Seq(3L)), df(Nil), root, 3L, 4)
+    MemberStore.writeDelta(df(Seq(3L)), None, root, 3L, 4)
     assertThrows[IllegalArgumentException](MemberStore.providerAsOf(root, 3L))
     // an unfinished delta (no DONE marker) is refused too
-    MemberStore.writeDelta(df(Seq(9L)), df(Nil), root, 2L, 4)
+    MemberStore.writeDelta(df(Seq(9L)), None, root, 2L, 4)
     java.nio.file.Files.delete(MemberStore.deltaDir(root, 2L).resolve("DONE"))
     assertThrows[IllegalArgumentException](MemberStore.providerAsOf(root, 2L))
   }
@@ -102,9 +102,9 @@ class MemberStoreSpec extends AnyFunSuite {
   test("expireOld keeps two base generations; JVM cache sweeps to them") {
     val root = java.nio.file.Files.createTempDirectory("memstore").toString
     MemberStore.writeBase(df(Seq(1L)), root, 0L, 2)
-    MemberStore.writeDelta(df(Seq(2L)), df(Nil), root, 1L, 2)
+    MemberStore.writeDelta(df(Seq(2L)), None, root, 1L, 2)
     MemberStore.writeBase(df(Seq(1L, 2L)), root, 2L, 2)
-    MemberStore.writeDelta(df(Seq(3L)), df(Nil), root, 3L, 2)
+    MemberStore.writeDelta(df(Seq(3L)), None, root, 3L, 2)
     MemberStore.writeBase(df(Seq(1L, 2L, 3L)), root, 4L, 2)
     MemberStore.expireOld(root)
     val names = {

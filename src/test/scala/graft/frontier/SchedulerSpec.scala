@@ -47,24 +47,32 @@ class SchedulerSpec extends AnyFunSuite {
   }
 
   test("robots gate without broadcast hint (shuffle-join host-state regime)") {
+    // a 10^8-host state table takes the shuffle join; the setting Spark
+    // already provides is what gets it there
     val q = queue(Seq(("h1.test", "/private/x", 1L, 9), ("h1.test", "/p/ok", 2L, 0)))
-    val gated = Scheduler.robotsGate(q, hostState(Seq("h1.test")), broadcastHostState = false)
-    assert(gated.select("path").as[String].collect().toSeq === Seq("/p/ok"))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val gated = Scheduler.robotsGate(q, hostState(Seq("h1.test")))
+      val physical = gated.queryExecution.executedPlan.toString
+      assert(!physical.contains("BroadcastHashJoin"), s"gate still broadcasts:\n$physical")
+      assert(gated.select("path").as[String].collect().toSeq === Seq("/p/ok"))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("winners recovery has no forced broadcast hint; planner still picks one here") {
     // winners ≈ Σcapacity = the round's whole fetch set — ~10^7 rows at the
     // target regime, so a hard broadcast() would be an OOM footgun (the
-    // same class as the removed tombstone hints). The LOGICAL plan must
-    // carry no ResolvedHint; at this sandbox size the planner should still
-    // CHOOSE a broadcast-hash join (with the specialized long-key relation)
-    // on its own.
-    // broadcastHostState = false so the ONLY hint that could appear would
-    // be a forced winners broadcast (the host-state broadcast hint is a
-    // separate, size-justified knob)
+    // same class as the removed tombstone hints), and the host-state side
+    // is left to the planner the same way. Neither LOGICAL plan may carry
+    // a ResolvedHint; at this sandbox size the planner should still CHOOSE
+    // a broadcast-hash join (with the specialized long-key relation) on
+    // its own.
     val q = queue((1L to 1000L).map(s => ("h1.test", s"/p/$s", s, (s % 3).toInt)))
-    val out = Scheduler.schedule(q, hostState(Seq("h1.test"), budget = 4), 10000L,
-      broadcastHostState = false)
+    val gated = Scheduler.robotsGate(q, hostState(Seq("h1.test")))
+    assert(!gated.queryExecution.analyzed.toString.contains("ResolvedHint"),
+      "robotsGate() must not force a join strategy")
+    val out = Scheduler.schedule(q, hostState(Seq("h1.test"), budget = 4), 10000L)
     assert(!out.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "schedule() must not force a join strategy")
     val physical = out.queryExecution.executedPlan.toString
