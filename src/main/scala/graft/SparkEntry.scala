@@ -958,12 +958,17 @@ object SparkEntry {
     }),
     "q_crawl_emits" -> ((s, d) => {
       val cfg = graft.fixtures.WebConfig(numSeeds = 30, rounds = 3)
-      val state = java.nio.file.Files.createTempDirectory("q-crawl-state").toString
-      val sink = java.nio.file.Files.createTempDirectory("q-crawl-sink").toString
-      graft.crawl.CrawlJob.run(s, cfg, state, sink)
-      graft.crawl.CrawlJob.readEmits(s, sink)
-        .select(col("round"), col("status"), col("host"), col("seq"),
-          col("ord"), col("url_hash"), col("priority"))
+      val state = java.nio.file.Files.createTempDirectory("q-crawl-state")
+      val sink = java.nio.file.Files.createTempDirectory("q-crawl-sink")
+      // checkpointed, the 42-row result no longer reads the sink, so both
+      // directories can go
+      try {
+        graft.crawl.CrawlJob.run(s, cfg, state.toString, sink.toString)
+        graft.crawl.CrawlJob.readEmits(s, sink.toString)
+          .select(col("round"), col("status"), col("host"), col("seq"),
+            col("ord"), col("url_hash"), col("priority"))
+          .localCheckpoint(true)
+      } finally Seq(state, sink).foreach(graft.tables.SnapshotTable.deleteRecursively)
     })
   )
 

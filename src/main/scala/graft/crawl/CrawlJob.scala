@@ -4,9 +4,12 @@ import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.{BloomSketch, MemberStore, Scheduler, SeenSet}
 import graft.functions.GraftExpressions._
 import graft.tables.SnapshotTable
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** The distributed crawl loop — the Spark restatement of blockspider's
   * poll-round state machine (SURVEY.md §3.1):
@@ -106,6 +109,21 @@ import org.apache.spark.sql.functions._
   *    segments) are one concurrent wave before the single publish
   *    ([[SnapshotTable.commit]]), and state reads use the schema recorded at
   *    commit — no schema-inference job per table read.
+  *  - a frame the round reads more than once is cut with an eager local
+  *    checkpoint and never cached with `persist()`. A cached relation
+  *    carries its whole plan into every consumer's plan, and AQE adds a
+  *    query stage for each copy: with four nested caches, one steady-round
+  *    plan ran to ~10^4 lines, and formatting such plans for every SQL
+  *    execution and re-plan was much of the round's driver time. Over a
+  *    checkpoint a consumer plans one `LogicalRDD` leaf. The round releases
+  *    its checkpoints once it publishes. The head, the fetched rows and the
+  *    ordered commits keep their shuffle partitioning, as a cached plan
+  *    does (`Bridge.localCheckpointAsCached`), so the round's jobs, tasks
+  *    and per-partition fetch metrics repeat from run to run.
+  *  - the round number enters plans as a bound leaf
+  *    ([[graft.functions.GraftExpressions.BoundLong]]), not a literal, so a
+  *    round generates the same code as the last round of the same shape and
+  *    compiles no new classes.
   */
 object CrawlJob {
 
@@ -209,14 +227,15 @@ object CrawlJob {
   def seedSnapshot(spark: SparkSession, state: SnapshotTable, queueAdd0: DataFrame,
       hostState: DataFrame, roundMillis: Long): Meta = {
     import spark.implicits._
-    val queueAdd = queueAdd0.localCheckpoint(true)
+    val cut = new Cuts
+    val queueAdd = cut(queueAdd0.localCheckpoint(true))
     val hostctr = queueAdd.groupBy("host")
       .agg((max("seq") + 1).as("next_seq"), lit(1L).as("next_ord"))
       .withColumn("hr", lit(0L))
     val memberAdd = queueAdd.select(col("url_hash"), lit(0L).as("r"))
     val memberCount = queueAdd.count()
     val (queueShaped, headAdd, headmeta) =
-      shapeAndBuildHead(queueAdd, hostState, roundMillis)
+      shapeAndBuildHead(queueAdd, hostState, roundMillis, cut)
     val emptyWindow = spark.emptyDataset[(String, Long, Long, Long, String, Long)]
       .toDF("host", "ord", "seq", "url_hash", "url", "ver")
     val emptyWDel = spark.emptyDataset[(String, Long)].toDF("host", "ord")
@@ -243,7 +262,30 @@ object CrawlJob {
       // these files atomically)
       alongside = Seq(() =>
         MemberStore.writeBase(memberAdd, memberStoreRoot(state), 0L, SeenSet.DefaultShards)))
+    cut.release()
     meta
+  }
+
+  /** The RDDs behind the local checkpoints of one round (or of the seed).
+    * Their blocks would otherwise stay cached until a GC lets Spark's
+    * `ContextCleaner` find them; the round releases them itself once its
+    * snapshot publishes, when none of its frames is read again.
+    */
+  private final class Cuts {
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+    /** Record a `localCheckpoint(true)` result for [[release]]; returns it.
+      * The caller checkpoints, so the job keeps the caller's call site.
+      */
+    def apply(checkpointed: DataFrame): DataFrame = {
+      checkpointed.queryExecution.logical match {
+        case r: LogicalRDD => rdds += r.rdd
+        case p => throw new IllegalArgumentException(s"not a local checkpoint: ${p.nodeName}")
+      }
+      checkpointed
+    }
+
+    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
   }
 
   /** Initial bloom sizing (items per shard); compaction resizes with 2×
@@ -379,21 +421,25 @@ object CrawlJob {
     *         as-is, do not re-shape; head_add rows; headmeta boundary rows)
     */
   def shapeAndBuildHead(queueAlive: DataFrame, hostState: DataFrame,
-      roundMillis: Long): (DataFrame, DataFrame, DataFrame) = {
+      roundMillis: Long): (DataFrame, DataFrame, DataFrame) =
+    shapeAndBuildHead(queueAlive, hostState, roundMillis, new Cuts)
+
+  private def shapeAndBuildHead(queueAlive: DataFrame, hostState: DataFrame,
+      roundMillis: Long, cut: Cuts): (DataFrame, DataFrame, DataFrame) = {
     val spark = queueAlive.sparkSession
     import spark.implicits._
     val caps = hostState.select(col("host"),
       (Scheduler.capacity(col("budget"), col("min_delay_ms"), roundMillis).cast("long") *
         HeadDepthRounds).as("head_depth"))
     val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    val shaped = queueAlive
+    val shaped = cut(queueAlive
       .join(caps, Seq("host"), "inner") // caps is per-host; planner broadcasts
       .select(col("host"), col("url"), col("url_hash"), col("seq"),
         col("priority"), col("qr"), col("head_depth"))
       .repartition(parts, pmod(xxhash64(col("host")), lit(parts)))
       .sortWithinPartitions(col("host"), col("priority").desc, col("seq").asc)
-      .localCheckpoint(true) // read twice: head pass below + the commit write
-    val combined = shaped
+      .localCheckpoint(true)) // read twice: head pass below + the commit write
+    val combined = cut(shaped
       .as[HeadIn]
       .mapPartitions { it =>
         // β exists only for truncated hosts: the row AT rank head_depth is
@@ -424,7 +470,7 @@ object CrawlJob {
         }
       }
       .toDF()
-      .localCheckpoint(true) // bounded: Σ head_depth + one meta row per host
+      .localCheckpoint(true)) // bounded: Σ head_depth + one meta row per host
     val headAdd = combined.filter(col("tag") === 0)
       .select("host", "url", "url_hash", "seq", "priority", "qr")
     val headmeta = combined.filter(col("tag") === 1).select("host", "bp", "bs")
@@ -463,17 +509,19 @@ object CrawlJob {
       maxBloomBroadcastBytes: Long): Meta = {
     import spark.implicits._
     val round = meta0.round + 1
+    val cut = new Cuts
 
     // Round inputs: the bounded head cache (NOT the full queue), the K-deep
     // window, per-host counters, and incremental membership bookkeeping
     // carried in meta — the (10^10-row at target scale) member/queue logs
     // are never recounted or rescanned.
-    val headAlive = readHead(spark, state).persist()
+    val headAlive = cut(Bridge.localCheckpointAsCached(readHead(spark, state)))
     val headmeta = state.read(spark, "headmeta")
     val memberCount0 = meta0.member_count
     val bloomCap = meta0.bloom_cap
-    val windowStart = readWindow(spark, state).localCheckpoint(true)
-    var hostctr = readHostctr(spark, state)
+    val windowStart = cut(readWindow(spark, state).localCheckpoint(true))
+    // `moved`: the revision path below advanced the host's counters
+    var hostctr = readHostctr(spark, state).withColumn("moved", lit(false))
     val emitParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // this round's membership deltas (appended at commit, O(delta) forever)
     val addParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -500,16 +548,16 @@ object CrawlJob {
         .toDF("host", "ord", "seq", "url_hash", "url", "ver", "cur_ver")
       // K-bounded per host — tiny; eager checkpoint truncates lineage and
       // pins the probe result for the emit write later in the round
-      val dropped = probed.filter(col("cur_ver") > col("ver")).localCheckpoint(true)
+      val dropped = cut(probed.filter(col("cur_ver") > col("ver")).localCheckpoint(true))
 
       // driver signal 1 of 2 on this path: did ANY window entry revise?
       if (!dropped.isEmpty) {
         emitParts += dropped.select(
-          lit(round).as("round"), lit("DROPPED").as("status"), col("host"),
+          bound_long(round).as("round"), lit("DROPPED").as("status"), col("host"),
           col("seq"), col("ord"), col("url_hash"), col("url"),
           pmod(xxhash64(col("url")), lit(10)).cast("int").as("priority"))
         window = window.join(dropped.select("host", "ord"), Seq("host", "ord"), "left_anti")
-        delParts += dropped.select(col("url_hash"), lit(round).as("dr"))
+        delParts += dropped.select(col("url_hash"), bound_long(round).as("dr"))
         winDelParts += dropped.select("host", "ord")
 
         // replacements: the pages the revised hosts serve NOW (observable
@@ -521,7 +569,7 @@ object CrawlJob {
         val revCtrs = hostctr
           .join(dropped.select("host").distinct(), Seq("host"), "left_semi")
           .select("host", "next_seq", "next_ord").as[(String, Long, Long)]
-        val replDf = revCtrs
+        val replDf = cut(revCtrs
           .mapPartitions(_.flatMap { case (host, seq0, ord0) =>
             SyntheticWeb.replacementsFor(cfg, host, round).zipWithIndex.map {
               case (raw, i) =>
@@ -531,21 +579,22 @@ object CrawlJob {
             }
           })
           .toDF("host", "seq", "ord", "url_hash", "url", "ver")
-          .localCheckpoint(true) // O(revised hosts · depth) rows
+          .localCheckpoint(true)) // O(revised hosts · depth) rows
 
         emitParts += replDf.select(
-          lit(round).as("round"), lit("ACCEPTED").as("status"), col("host"),
+          bound_long(round).as("round"), lit("ACCEPTED").as("status"), col("host"),
           col("seq"), col("ord"), col("url_hash"), col("url"),
           pmod(xxhash64(col("url")), lit(10)).cast("int").as("priority"))
         window = window.unionByName(
           replDf.select("host", "ord", "seq", "url_hash", "url", "ver"))
         winAddParts += replDf.select("host", "ord", "seq", "url_hash", "url", "ver")
-        addParts += replDf.select(col("url_hash"), lit(round).as("r"))
+        addParts += replDf.select(col("url_hash"), bound_long(round).as("r"))
 
         val ctrDelta = replDf.groupBy("host").agg(count(lit(1)).as("d"))
         hostctr = hostctr.join(broadcast(ctrDelta), Seq("host"), "left")
           .withColumn("next_seq", col("next_seq") + coalesce(col("d"), lit(0L)))
           .withColumn("next_ord", col("next_ord") + coalesce(col("d"), lit(0L)))
+          .withColumn("moved", col("d").isNotNull)
           .drop("d")
       }
     }
@@ -563,7 +612,7 @@ object CrawlJob {
     val emergencyRefill = cfg.roundMillis > meta0.head_ms &&
       headIsShallow(headmeta, headAlive, hostState, cfg.roundMillis)
     val schedSource =
-      if (emergencyRefill) readQueue(spark, state).persist()
+      if (emergencyRefill) cut(Bridge.localCheckpointAsCached(readQueue(spark, state)))
       else headAlive
     val scheduled = Scheduler.schedule(schedSource.drop("qr"), hostState, cfg.roundMillis)
       .select("host", "url", "url_hash", "seq", "priority", "host_rank")
@@ -583,27 +632,25 @@ object CrawlJob {
     }
 
     // ---- 4. prefix commit: drop everything at/after a host's first failure
-    val fetchedDf = fetched.toDF().persist()
+    val fetchedDf = cut(Bridge.localCheckpointAsCached(fetched.toDF()))
     val minFailed = fetchedDf.filter(!col("ok"))
       .groupBy("host").agg(min("host_rank").as("min_failed"))
     val committed = fetchedDf
       .join(broadcast(minFailed), Seq("host"), "left")
       .filter(col("min_failed").isNull || col("host_rank") < col("min_failed"))
       .drop("min_failed")
-      .persist()
 
     // ---- 5. ordered commit: ord = next_ord + host_rank - 1 ---------------
-    val withOrd = committed
+    val withOrd = cut(Bridge.localCheckpointAsCached(committed
       .join(hostctr.select("host", "next_ord"), Seq("host"), "left")
       .withColumn("ord", coalesce(col("next_ord"), lit(1L)) + col("host_rank") - 1)
-      .drop("next_ord")
-      .persist()
+      .drop("next_ord")))
 
     emitParts += withOrd.select(
-      lit(round).as("round"), lit("ACCEPTED").as("status"), col("host"),
+      bound_long(round).as("round"), lit("ACCEPTED").as("status"), col("host"),
       col("seq"), col("ord"), col("url_hash"), col("url"), col("priority"))
 
-    val pages = withOrd.select(lit(round).as("round"), col("host"), col("seq"),
+    val pages = withOrd.select(bound_long(round).as("round"), col("host"), col("seq"),
       col("url_hash"), col("image_id"))
 
     // ---- 6. state updates: window delta + queue/head tombstones ----------
@@ -615,7 +662,7 @@ object CrawlJob {
     // beyond-K ords — O(active hosts × K), never a full-table rewrite.
     val emptyWAdd = spark.emptyDataset[(String, Long, Long, Long, String, Long)]
       .toDF("host", "ord", "seq", "url_hash", "url", "ver")
-    val winAdds = (winAddParts :+ emptyWAdd).reduce(_ unionByName _).localCheckpoint(true)
+    val winAdds = cut((winAddParts :+ emptyWAdd).reduce(_ unionByName _).localCheckpoint(true))
     val evictDels = window
       .join(winAdds.select("host").distinct(), Seq("host"), "left_semi")
       .withColumn("w_rank",
@@ -626,8 +673,8 @@ object CrawlJob {
     // queue/head removal is a DELTA: tombstone this round's committed
     // fetches in `queue_del`, which the head reads as well (the head is a
     // cache of the queue's top ranks). Failed fetches stay alive for retry.
-    val queueDelDelta = withOrd.select(col("url_hash"), lit(round).as("dr"))
-      .localCheckpoint(true)
+    val queueDelDelta = cut(withOrd.select(col("url_hash"), bound_long(round).as("dr"))
+      .localCheckpoint(true))
 
     // ---- 7. discoveries: canonicalize → robots gate → membership dedup ---
     val candidatesRaw = withOrd
@@ -656,7 +703,7 @@ object CrawlJob {
     def delta(parts: Seq[DataFrame], empty: DataFrame): (DataFrame, Long) =
       if (parts.isEmpty) (empty, 0L)
       else {
-        val df = parts.reduce(_ unionByName _).localCheckpoint(true)
+        val df = cut(parts.reduce(_ unionByName _).localCheckpoint(true))
         (df, df.count())
       }
     val (replAdds, replCount) = delta(addParts.toSeq, emptyHashDelta)
@@ -664,11 +711,11 @@ object CrawlJob {
 
     // probe blooms = persisted ∪ this round's replacement adds (tiny);
     // committed blooms additionally OR in the new entries below.
-    val probeBlooms =
+    val probeBlooms = cut(
       (if (replCount == 0) state.read(spark, "blooms")
        else SeenSet.mergeBlooms(state.read(spark, "blooms"),
          SeenSet.bloomDelta(replAdds, bloomCap)))
-        .localCheckpoint(true) // ≤ shards blob rows; probe AND commit base
+        .localCheckpoint(true)) // ≤ shards blob rows; probe AND commit base
 
     // probe transport: broadcast while the blob set is small; shard-local
     // files once it is not (at 10^10 keys the blobs are ~GBs — they must
@@ -684,12 +731,12 @@ object CrawlJob {
       .withColumn("cand_rank",
         row_number().over(Window.partitionBy(col("host")).orderBy(col("url_hash"))).cast("long"))
 
-    val newEntries = fresh
+    val newEntries = cut(fresh
       .join(hostctr.select("host", "next_seq"), Seq("host"), "left")
       .withColumn("seq", coalesce(col("next_seq"), lit(1L)) + col("cand_rank") - 1)
       .select("host", "url", "url_hash", "seq", "priority")
-      .withColumn("qr", lit(round))
-      .localCheckpoint(true) // O(delta); feeds hostctr, head, commit, fold
+      .withColumn("qr", bound_long(round))
+      .localCheckpoint(true)) // O(delta); feeds hostctr, head, commit, fold
 
     // head admission: discoveries ranking before their host's boundary join
     // the head now; the rest live in the backing log until the next fold
@@ -705,11 +752,11 @@ object CrawlJob {
     // rounds never evaluate it. Eager-checkpointed on first use: the fold
     // consumes it three times (bloom rebuild, member_add rewrite, store
     // base) and must not re-read the parquet log for each
-    lazy val membersEnd = readMembers(spark, state)
+    lazy val membersEnd = cut(readMembers(spark, state)
       .join(delsDelta.select("url_hash"), Seq("url_hash"), "left_anti")
       .unionByName(replAdds.select("url_hash"))
       .unionByName(newEntries.select("url_hash"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val isCompaction = round % SeenCompactionInterval == 0
 
     // bloom maintenance, O(delta): OR-merge this round's adds into the
@@ -721,33 +768,34 @@ object CrawlJob {
       if (isCompaction && memberCount > SeenSet.DefaultShards * bloomCap / 2)
         math.max(2L * memberCount / SeenSet.DefaultShards, InitialBloomCapPerShard)
       else bloomCap
-    val blooms =
+    val blooms = cut(
       (if (isCompaction) SeenSet.buildBloomsDf(membersEnd, newBloomCap)
        else if (newCount == 0) probeBlooms
        else SeenSet.mergeBlooms(probeBlooms, SeenSet.bloomDelta(newEntries, bloomCap)))
         // the merge's row order follows shuffle-read order; sorting in the
         // checkpoint job makes the committed segment repeat byte for byte
         .sortWithinPartitions("shard")
-        .localCheckpoint(true) // ≤ shards blob rows
+        .localCheckpoint(true)) // ≤ shards blob rows
 
     // ---- 8. host counters: last-writer-wins delta rows --------------------
     val dOrd = withOrd.groupBy("host").agg(count(lit(1)).as("d_ord"))
     val dSeq = newEntries.groupBy("host").agg(count(lit(1)).as("d_seq"))
-    val hostctrEnd = hostctr
+    val ctrEnd = hostctr
       .join(dOrd, Seq("host"), "full_outer")
       .join(dSeq, Seq("host"), "full_outer")
       .select(col("host"),
         (coalesce(col("next_seq"), lit(1L)) + coalesce(col("d_seq"), lit(0L))).as("next_seq"),
-        (coalesce(col("next_ord"), lit(1L)) + coalesce(col("d_ord"), lit(0L))).as("next_ord"))
+        (coalesce(col("next_ord"), lit(1L)) + coalesce(col("d_ord"), lit(0L))).as("next_ord"),
+        (col("d_ord").isNotNull || col("d_seq").isNotNull ||
+          coalesce(col("moved"), lit(false))).as("active"))
+    val hostctrEnd = ctrEnd.drop("active")
     // delta = rows for hosts whose counters moved this round (fetched,
-    // discovered-into, or revised) — O(active hosts), not O(hosts)
-    val activeCtrHosts = dOrd.select("host")
-      .unionByName(dSeq.select("host"))
-      .unionByName(winAdds.select("host")) // replacement hosts (rev path)
-      .distinct()
-    val hostctrDelta = hostctrEnd
-      .join(activeCtrHosts, Seq("host"), "left_semi")
-      .withColumn("hr", lit(round))
+    // discovered-into, or revised) — O(active hosts), not O(hosts). A flag
+    // instead of a semi-join with the active hosts: AQE turned that join into
+    // a broadcast either before or after planning a shuffle of this side,
+    // depending on which stage finished first, so its job count varied.
+    val hostctrDelta = ctrEnd.filter(col("active")).drop("active")
+      .withColumn("hr", bound_long(round))
 
     // ---- 9. emit + checkpoint: one write wave, then the publish ----------
     // The sink writes ride the commit's concurrent wave, which completes
@@ -765,7 +813,7 @@ object CrawlJob {
         .agg(count(lit(1)).as("n_fetched"),
           sum(when(!col("ok"), 1L).otherwise(0L)).as("n_failed"),
           min("seq").as("min_seq"), max("seq").as("max_seq"))
-        .withColumn("round", lit(round))
+        .withColumn("round", bound_long(round))
         .write.mode(SaveMode.Overwrite).parquet(f"$sinkDir/metrics-$round%04d"))
 
     val refolded = isCompaction || emergencyRefill
@@ -774,7 +822,7 @@ object CrawlJob {
     val meta = Seq(metaEnd).toDF()
     val winDels = (winDelParts :+ spark.emptyDataset[(String, Long)].toDF("host", "ord"))
       .reduce(_ unionByName _)
-    val addsDelta = replAdds.unionByName(newEntries.select(col("url_hash"), lit(round).as("r")))
+    val addsDelta = replAdds.unionByName(newEntries.select(col("url_hash"), bound_long(round).as("r")))
     if (refolded) {
       // compaction (or emergency re-provision): fold every event log into a
       // single alive segment, clear tombstones, and rebuild the head cache —
@@ -791,22 +839,22 @@ object CrawlJob {
       // head cache is provisioned from the same sorted partitions — the r4
       // fold shuffled the queue once here and again at commit
       val (queueShaped, headEnd, headmetaEnd) =
-        shapeAndBuildHead(queueEnd, hostState, cfg.roundMillis)
+        shapeAndBuildHead(queueEnd, hostState, cfg.roundMillis, cut)
       // the fold's write wave also carries the fingerprint store's fresh
       // base generation from the alive membership (the same rows the
       // member_add rewrite persists) — written before the publish (crash ⇒
       // deterministic re-run rewrites it)
       state.commit(Map(
-        "member_add" -> membersEnd.withColumn("r", lit(round)),
+        "member_add" -> membersEnd.withColumn("r", bound_long(round)),
         "member_del" -> emptyDelDelta,
         "queue_add" -> queueShaped,
         "queue_del" -> emptyDelDelta,
         "head_add" -> headEnd,
         "headmeta" -> headmetaEnd,
-        "window_add" -> window.join(evictDels, Seq("host", "ord"), "left_anti")
-          .localCheckpoint(true),
+        "window_add" -> cut(window.join(evictDels, Seq("host", "ord"), "left_anti")
+          .localCheckpoint(true)),
         "window_del" -> spark.emptyDataset[(String, Long)].toDF("host", "ord"),
-        "hostctr_add" -> hostctrEnd.withColumn("hr", lit(round)),
+        "hostctr_add" -> hostctrEnd.withColumn("hr", bound_long(round)),
         "blooms" -> blooms,
         "meta" -> meta),
         alongside = sinkWrites :+ (() => MemberStore.writeBase(membersEnd,
@@ -828,13 +876,10 @@ object CrawlJob {
         alongside = sinkWrites :+ (() => MemberStore.writeDelta(addsDelta, dels,
           memberStoreRoot(state), round, SeenSet.DefaultShards)))
     }
+    cut.release()
     state.expireOldSnapshots(keep = 2)
     expireOldBloomBlobs(state.dir, round, keep = 2)
     MemberStore.expireOld(memberStoreRoot(state))
-
-    fetchedDf.unpersist(); committed.unpersist(); withOrd.unpersist()
-    headAlive.unpersist()
-    if (emergencyRefill) schedSource.unpersist()
     metaEnd
   }
 

@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -137,6 +139,26 @@ object GraftExpressions {
     override def prettyName: String = "nfc_normalize"
   }
 
+  /** A long constant that generated code reads from the references array
+    * (`ctx.addReferenceObj`) instead of inlining it. Two plans that differ
+    * only in its value generate the same source, so the second reuses the
+    * first's compiled classes from the codegen cache, where a `lit` would
+    * compile new ones. Not foldable, so the optimizer keeps the leaf instead
+    * of turning it into a literal. `CrawlJob` binds its round number this
+    * way: with `lit(round)` every steady round compiled 14 new classes.
+    */
+  case class BoundLong(value: Long) extends LeafExpression {
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("boundLong", java.lang.Long.valueOf(value), "java.lang.Long")
+      ev.copy(code = code"final long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+    }
+    override def prettyName: String = "bound_long"
+  }
+
   // ---- Column-level API -------------------------------------------------
 
   private def expr(c: Column): Expression = Bridge.expression(c)
@@ -151,6 +173,7 @@ object GraftExpressions {
   def mix64_salted(c: Column, salt: Long): Column = col(Mix64Salted(expr(c), salt))
   def nfc_normalize(c: Column): Column = col(NfcNormalize(expr(c)))
   def strip_tracking(c: Column): Column = col(StripTracking(expr(c)))
+  def bound_long(value: Long): Column = col(BoundLong(value))
 
   /** Register all graft scalar functions for SQL use. */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {

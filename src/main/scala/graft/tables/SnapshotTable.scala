@@ -74,7 +74,7 @@ final class SnapshotTable(val dir: String) {
     val prev = latestSnapshot
     val id = prev.map(_ + 1).getOrElse(0L)
     val sd = snapDir(id)
-    deleteRecursively(sd) // an orphan of a failed attempt at this id
+    SnapshotTable.deleteRecursively(sd) // an orphan of a failed attempt at this id
     Files.createDirectories(sd)
     val written = tables ++ appendOnly
     SnapshotTable.concurrently(alongside ++ written.map { case (name, df) =>
@@ -182,12 +182,16 @@ final class SnapshotTable(val dir: String) {
           val sid = p.getFileName.toString.stripPrefix("snap-").toLong
           sid < latest - keep + 1 && !live.contains(sid)
         }
-        .toSeq.foreach(deleteRecursively)
+        .toSeq.foreach(SnapshotTable.deleteRecursively)
       finally s.close()
     }
   }
+}
 
-  private def deleteRecursively(p: Path): Unit = {
+object SnapshotTable {
+
+  /** Delete `p` and, if it is a directory, everything under it. */
+  def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)
       try s.iterator().asScala.toSeq.foreach(deleteRecursively)
@@ -195,9 +199,6 @@ final class SnapshotTable(val dir: String) {
     }
     Files.deleteIfExists(p)
   }
-}
-
-object SnapshotTable {
 
   /** The schema a parquet segment written from `s` reads back with: Spark
     * writes every field (and element, and map value) as nullable.

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ScalaCheck Gens sampled with fixed seeds (no scalatestplus bridge in the
   * offline cache), so failures are reproducible.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -169,7 +169,7 @@ class PropertySpec extends AnyFunSuite {
       val blooms = graft.frontier.SeenSet.buildBloomsDf(seenDf, 1024)
         .localCheckpoint(true)
       val bc = graft.frontier.SeenSet.broadcastProvider(spark, blooms)
-      val dir = java.nio.file.Files.createTempDirectory(s"prop-blobs-$i").toString
+      val dir = tempDir(s"prop-blobs-$i")
       val fp = graft.frontier.SeenSet.writeShardFiles(blooms, dir)
       val exact = candDf.join(seenDf, Seq("url_hash"), "left_anti")
         .as[Long].collect().toSet

@@ -16,16 +16,16 @@ import java.nio.file.Files
   * scripted revisions (reorg analog), injected fetch failures
   * (prefix-commit), robots gating, and checkpoint/resume.
   */
-class CrawlParitySpec extends AnyFunSuite {
+class CrawlParitySpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft-crawl").toString
+  private def tmp(): String = tempDir("graft-crawl")
 
   /** Spark jobs a steady `run(upToRound = r)` of a 40-seed crawl may start
-    * (70 measured, plus 2 of slack).
+    * (63 measured, plus 2 of slack).
     */
-  private val JobsPerRoundCeiling = 72
+  private val JobsPerRoundCeiling = 65
 
   /** The method that runs the shallow-head guard query. */
   private val GuardFrame = "headIsShallow("
@@ -34,6 +34,11 @@ class CrawlParitySpec extends AnyFunSuite {
     * (a write's output path shows under `Arguments:`, not `Location:`).
     */
   private val MemberLogScan = "Location: [^\n]*/member_add".r
+
+  /** A cached relation (`persist()`/`cache()`) in a plan description, as
+    * planned or as an adaptive query stage.
+    */
+  private val CachedRelation = "InMemoryRelation|InMemoryTableScan|TableCacheQueryStage".r
 
   private def emitKey(r: (Long, String, String, Long, Long, Long, String, Int)) = r
 
@@ -125,19 +130,37 @@ class CrawlParitySpec extends AnyFunSuite {
   }
 
   test("steady rounds stay under a jobs ceiling, never run the shallow-head guard, and read recorded schemas") {
-    val cfg = WebConfig(numSeeds = 40, rounds = 5)
+    val cfg = WebConfig(numSeeds = 40, rounds = 6)
     val stateDir = tmp(); val sinkDir = tmp()
-    CrawlJob.run(spark, cfg, stateDir, sinkDir, upToRound = Some(1))
-    val rounds = (2L to 5L).map { r =>
-      SparkEvents.during(spark.sparkContext)(CrawlJob.run(spark, cfg, stateDir, sinkDir,
-        upToRound = Some(r)))._2
+    val sc = spark.sparkContext
+    // a round (and the seed) releases every RDD it checkpointed once it publishes
+    def runTo(r: Long): SparkEvents = {
+      val before = sc.getPersistentRDDs.keySet
+      val (_, events) = SparkEvents.during(sc)(CrawlJob.run(spark, cfg, stateDir, sinkDir,
+        upToRound = Some(r)))
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"run to round $r left RDDs ${left.toSeq.sorted} persisted")
+      events
     }
+    runTo(1L)
+    val rounds = (2L to 6L).map(runTo)
     val jobs = rounds.map(_.jobs)
     assert(jobs.max <= JobsPerRoundCeiling, s"jobs per round: $jobs")
+    // a reused frame is cut by a local checkpoint, never cached: no plan
+    // carries a cached relation (and its whole lineage) into its consumers
+    val plans = rounds.flatMap(_.sqlPlans)
+    val cached = plans.flatMap(CachedRelation.findFirstIn)
+    assert(cached.isEmpty, s"a steady round planned over a cached relation: ${cached.distinct}")
+    // the round number is bound, not inlined: once rounds 2-4 have compiled
+    // the steady round's classes (round 4's revisions plan joins that rounds
+    // 2-3 did not), later rounds reuse them from the codegen cache
+    assert(rounds.drop(3).map(_.codegenCompiles) === Seq(0L, 0L),
+      s"classes compiled per round 2-6: ${rounds.map(_.codegenCompiles)}")
+    info(s"jobs per round 2-6: $jobs; largest plan description: ${plans.map(_.length).max} chars")
     assert(rounds.forall(_.sqlCallSites.forall(!_.contains(GuardFrame))),
       "the shallow-head guard ran although roundMillis never grew")
     // dedup probes the member store; only the fold reads the O(total) log
-    val memberScans = rounds.flatMap(_.sqlPlans).flatMap(MemberLogScan.findFirstIn)
+    val memberScans = plans.flatMap(MemberLogScan.findFirstIn)
     assert(memberScans.isEmpty, "a steady round scanned the member log")
     val st = new SnapshotTable(stateDir)
     // the pattern does match a plan that reads the member log

@@ -13,13 +13,13 @@ import java.nio.file.Files
   * driver and executors, so the cache under test is exactly the one the
   * probe tasks populate.
   */
-class FileShardEvictionSpec extends AnyFunSuite {
+class FileShardEvictionSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("file-mode crawl across many rounds keeps ≤ two generations of blob shards resident") {
     val cfg = WebConfig(numSeeds = 40, rounds = 6)
-    val stateDir = Files.createTempDirectory("shard-evict-state").toString
-    val sinkDir = Files.createTempDirectory("shard-evict-sink").toString
+    val stateDir = tempDir("shard-evict-state")
+    val sinkDir = tempDir("shard-evict-sink")
     // maxBloomBroadcastBytes = 0 forces the file-shard probe transport
     // from round 1 — a new blob dir every round
     graft.crawl.CrawlJob.run(spark, cfg, stateDir, sinkDir, maxBloomBroadcastBytes = 0L)

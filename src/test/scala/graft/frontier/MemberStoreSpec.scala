@@ -10,14 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * store against the parquet anti-join end-to-end (bloom path vs exact
   * path, byte-identical crawls).
   */
-class MemberStoreSpec extends AnyFunSuite {
+class MemberStoreSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def df(hs: Seq[Long]) = hs.toDF("url_hash")
 
   test("alive semantics match the event-log oracle across add/del/re-add") {
-    val root = java.nio.file.Files.createTempDirectory("memstore").toString
+    val root = tempDir("memstore")
     val shards = 8
     // base at round 0: keys 0..99
     MemberStore.writeBase(df(0L until 100L), root, 0L, shards)
@@ -59,7 +59,7 @@ class MemberStoreSpec extends AnyFunSuite {
   }
 
   test("probe agrees with the codegen expression over a DataFrame") {
-    val root = java.nio.file.Files.createTempDirectory("memstore").toString
+    val root = tempDir("memstore")
     MemberStore.writeBase(df(Seq(1L, 2L, 3L, -5L)), root, 0L, 4)
     MemberStore.writeDelta(df(Seq(100L)), Some(df(Seq(2L))), root, 1L, 4)
     val p = MemberStore.providerAsOf(root, 1L)
@@ -72,7 +72,7 @@ class MemberStoreSpec extends AnyFunSuite {
   }
 
   test("a fold supersedes deltas; provider picks the newest base at-or-before") {
-    val root = java.nio.file.Files.createTempDirectory("memstore").toString
+    val root = tempDir("memstore")
     MemberStore.writeBase(df(Seq(1L, 2L)), root, 0L, 4)
     MemberStore.writeDelta(df(Seq(3L)), Some(df(Seq(1L))), root, 1L, 4)
     MemberStore.writeBase(df(Seq(2L, 3L)), root, 2L, 4) // the fold's alive set
@@ -87,7 +87,7 @@ class MemberStoreSpec extends AnyFunSuite {
   }
 
   test("refuses a round gap or an incomplete delta (exactness guard)") {
-    val root = java.nio.file.Files.createTempDirectory("memstore").toString
+    val root = tempDir("memstore")
     MemberStore.writeBase(df(Seq(1L)), root, 0L, 4)
     MemberStore.writeDelta(df(Seq(2L)), None, root, 1L, 4)
     // round 2 missing entirely
@@ -100,7 +100,7 @@ class MemberStoreSpec extends AnyFunSuite {
   }
 
   test("expireOld keeps two base generations; JVM cache sweeps to them") {
-    val root = java.nio.file.Files.createTempDirectory("memstore").toString
+    val root = tempDir("memstore")
     MemberStore.writeBase(df(Seq(1L)), root, 0L, 2)
     MemberStore.writeDelta(df(Seq(2L)), None, root, 1L, 2)
     MemberStore.writeBase(df(Seq(1L, 2L)), root, 2L, 2)

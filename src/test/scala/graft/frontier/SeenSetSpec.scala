@@ -4,7 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SeenSetSpec extends AnyFunSuite {
+class SeenSetSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -49,7 +49,7 @@ class SeenSetSpec extends AnyFunSuite {
   test("file-shard provider agrees with broadcast provider") {
     val keys = (1L to 4000L).map(_ * 31L)
     val blooms = SeenSet.buildBloomsDf(seenDf(keys), 1024).localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloomblobs").toString
+    val dir = tempDir("graft-bloomblobs")
     val fileProv = SeenSet.writeShardFiles(blooms, dir)
     val bcProv = SeenSet.broadcastProvider(spark, blooms)
     assert(fileProv.shards === SeenSet.DefaultShards)
@@ -67,7 +67,7 @@ class SeenSetSpec extends AnyFunSuite {
     val keys = (1L to 1000L).map(_ * 17L)
     val blooms = SeenSet.buildBloomsDf(seenDf(keys), 1024).localCheckpoint(true)
     def newDir(tag: String) =
-      java.nio.file.Files.createTempDirectory(s"graft-blobs-$tag").toString
+      tempDir(s"graft-blobs-$tag")
     val (dirA, dirB, dirC) = (newDir("a"), newDir("b"), newDir("c"))
     val provA = SeenSet.writeShardFiles(blooms, dirA)
     val provB = SeenSet.writeShardFiles(blooms, dirB)

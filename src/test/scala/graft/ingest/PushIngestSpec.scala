@@ -3,9 +3,9 @@ package graft.ingest
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-class PushIngestSpec extends AnyFunSuite {
+class PushIngestSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -39,7 +39,7 @@ class PushIngestSpec extends AnyFunSuite {
     }"""
 
   test("push event converts onto the canonical Block schema; txns skipped, logs embedded") {
-    val f = Files.createTempFile("push", ".json")
+    val f = Files.createTempFile(Paths.get(tempDir("push")), "push", ".json")
     Files.writeString(f, eventJson)
     val blocks = PushIngest.convert(PushIngest.readPushEvents(spark, f.toString)).cache()
 
@@ -60,7 +60,7 @@ class PushIngestSpec extends AnyFunSuite {
   }
 
   test("malformed push event (no block) converts to one null-number row, no exception") {
-    val f = Files.createTempFile("push-bad", ".json")
+    val f = Files.createTempFile(Paths.get(tempDir("push-bad")), "push-bad", ".json")
     Files.writeString(f, """{"sequenceNumber":"11"}""")
     val rows = PushIngest.convert(PushIngest.readPushEvents(spark, f.toString))
       .select("number").collect()
@@ -69,7 +69,7 @@ class PushIngestSpec extends AnyFunSuite {
   }
 
   test("pull path and push path produce union-compatible canonical schemas") {
-    val f = Files.createTempFile("push2", ".json")
+    val f = Files.createTempFile(Paths.get(tempDir("push2")), "push2", ".json")
     Files.writeString(f, eventJson)
     val push = PushIngest.convert(PushIngest.readPushEvents(spark, f.toString))
     val pull = BlockIngest.convert(

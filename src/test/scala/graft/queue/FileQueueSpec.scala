@@ -4,9 +4,8 @@ import graft.SparkTestBase
 import graft.streaming.EnvelopeStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class FileQueueSpec extends AnyFunSuite {
+class FileQueueSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -17,7 +16,7 @@ class FileQueueSpec extends AnyFunSuite {
       .toDF("status", "url_hash", "url", "host", "seq", "round", "version", "ts")
 
   test("producer/consumer round-trip with manual commit (at-least-once)") {
-    val q = new FileQueue(Files.createTempDirectory("fq").toString)
+    val q = new FileQueue(tempDir("fq"))
     q.append("hooks", envelopes(1, 5))
     q.append("hooks", envelopes(2, 3))
 
@@ -43,7 +42,7 @@ class FileQueueSpec extends AnyFunSuite {
   }
 
   test("fan-out: one append per topic, topics independent") {
-    val q = new FileQueue(Files.createTempDirectory("fq2").toString)
+    val q = new FileQueue(tempDir("fq2"))
     Seq("hot", "cold").foreach(t => q.append(t, envelopes(1, 4)))
     assert(q.poll(spark, "hot", "g", EnvelopeStream.envelopeSchema)._1.count() === 4)
     q.commit("hot", "g", 0L)
@@ -52,7 +51,7 @@ class FileQueueSpec extends AnyFunSuite {
   }
 
   test("structured-streaming drain over the queue dir: windowed segment stats") {
-    val dir = Files.createTempDirectory("fq3").toString
+    val dir = tempDir("fq3")
     val q = new FileQueue(dir)
     q.append("t", envelopes(1, 6))
     q.append("t", envelopes(2, 6))

@@ -9,7 +9,7 @@ import java.nio.file.Files
 /** Custom streaming state (flatMapGroupsWithState): the per-host cursor
   * must make the at-least-once producer side effect-idempotent on read.
   */
-class HostCursorStreamSpec extends AnyFunSuite {
+class HostCursorStreamSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -60,7 +60,7 @@ class HostCursorStreamSpec extends AnyFunSuite {
   }
 
   test("streaming end-to-end: per-host state survives micro-batches, replay adds nothing") {
-    val dir = Files.createTempDirectory("graft-cursor").toString
+    val dir = tempDir("graft-cursor")
     def write(name: String, rows: Seq[(String, String, Long)]): Unit = {
       val p = java.nio.file.Paths.get(dir, name)
       val json = rows.map { case (h, st, o) =>
@@ -103,8 +103,8 @@ class HostCursorStreamSpec extends AnyFunSuite {
     // correlated revisions at round 2 guarantee DROPPED envelopes, so the
     // replay below exercises retraction idempotence, not just commits
     val cfg = graft.fixtures.WebConfig(numSeeds = 30, rounds = 3, correlatedRevRound = 2)
-    val state = Files.createTempDirectory("cursor-crawl-state").toString
-    val sink = Files.createTempDirectory("cursor-crawl-sink").toString
+    val state = tempDir("cursor-crawl-state")
+    val sink = tempDir("cursor-crawl-sink")
     graft.crawl.CrawlJob.run(spark, cfg, state, sink)
     val emits = graft.crawl.CrawlJob.readEmits(spark, sink)
 

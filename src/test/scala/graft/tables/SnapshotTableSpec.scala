@@ -2,19 +2,22 @@ package graft.tables
 
 import graft.SparkTestBase
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.graft.SparkEvents
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The commit protocol: one concurrent write wave, then the publish. A
   * failed wave must leave the previous snapshot current, and reads of a
   * committed table must not start schema-inference jobs.
   */
-class SnapshotTableSpec extends AnyFunSuite {
+class SnapshotTableSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft-snap").toString
+  private def tmp(): String = tempDir("graft-snap")
 
   private def longs(st: SnapshotTable, name: String): Seq[Long] =
     st.read(spark, name).as[Long].collect().toSeq.sorted
@@ -80,5 +83,34 @@ class SnapshotTableSpec extends AnyFunSuite {
     st.commit(Map("t" -> Seq(("a", 2L)).toDF("s", "x")))
     assert(st.read(spark, "t").columns.toSeq === Seq("s", "x"))
     assert(st.read(spark, "t", Some(0L)).as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("local writes set permissions and leave no checksum sidecars; reads still check page CRCs") {
+    val fs = FileSystem.get(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[graft.GraftLocalFileSystem])
+    val st = new SnapshotTable(tmp())
+    // random longs: snappy leaves them as literals, so each value's bytes
+    // appear in the file as written
+    val vs = Seq.fill(1000)(scala.util.Random.nextLong()).distinct.sorted
+    st.commit(Map("t" -> vs.toDF("v").coalesce(1)))
+    val files = Files.walk(Paths.get(st.dir)).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+    assert(files.filter(_.getFileName.toString.endsWith(".crc")).isEmpty)
+    val part = files.filter(_.getFileName.toString.startsWith("part-")).head
+    // Hadoop's default umask (022) applied through java.nio
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(part)) === "rw-r--r--")
+    assert(longs(st, "t") === vs)
+
+    // flip a bit of one stored value (little-endian, in the dictionary page):
+    // without the CRC check the read would return a wrong value silently
+    val bytes = Files.readAllBytes(part)
+    val value = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putLong(vs(500)).array()
+    val at = bytes.indices.find(i => bytes.slice(i, i + 8).sameElements(value)).get
+    bytes(at) = (bytes(at) ^ 1).toByte
+    Files.write(part, bytes)
+    val e = intercept[Exception](longs(st, "t"))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("CRC checksum")),
+      causes.map(_.toString).mkString("\n"))
   }
 }

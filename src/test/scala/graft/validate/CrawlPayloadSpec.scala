@@ -12,14 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * equality). ImageValidateSpec pins the invariant on the table itself;
   * this spec pins that the CRAWL's output joins back onto it cleanly.
   */
-class CrawlPayloadSpec extends AnyFunSuite {
+class CrawlPayloadSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("accepted emits resolve to image rows passing PSNR+caption validation") {
     val cfg = WebConfig(numSeeds = 25, rounds = 3)
-    val state = java.nio.file.Files.createTempDirectory("payload-state").toString
-    val sink = java.nio.file.Files.createTempDirectory("payload-sink").toString
+    val state = tempDir("payload-state")
+    val sink = tempDir("payload-sink")
     graft.crawl.CrawlJob.run(spark, cfg, state, sink)
 
     // pages = the committed fetch payload references (one row per ACCEPTED

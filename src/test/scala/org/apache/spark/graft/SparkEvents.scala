@@ -2,15 +2,19 @@ package org.apache.spark.graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import scala.jdk.CollectionConverters._
 
 /** What a block of code started on a SparkContext: its jobs, and for each
   * of its SQL executions the long call site (submitting thread's stack) and
-  * the physical plan description.
+  * the physical plan descriptions (the one at the start and each adaptive
+  * re-plan), plus the generated classes it compiled (Spark's codegen cache
+  * misses; a process-wide count).
   */
-final case class SparkEvents(jobs: Int, sqlCallSites: Seq[String], sqlPlans: Seq[String])
+final case class SparkEvents(jobs: Int, sqlCallSites: Seq[String], sqlPlans: Seq[String],
+    codegenCompiles: Long)
 
 object SparkEvents {
 
@@ -22,6 +26,7 @@ object SparkEvents {
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart =>
         sites.add(s.details); plans.add(s.physicalPlanDescription)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
       case _ =>
     }
   }
@@ -35,9 +40,11 @@ object SparkEvents {
     val r = new Recorder
     sc.addSparkListener(r)
     try {
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val out = body
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       sc.listenerBus.waitUntilEmpty(60000L)
-      (out, SparkEvents(r.jobs.get(), r.sites.asScala.toSeq, r.plans.asScala.toSeq))
+      (out, SparkEvents(r.jobs.get(), r.sites.asScala.toSeq, r.plans.asScala.toSeq, compiles))
     } finally sc.removeSparkListener(r)
   }
 }
